@@ -559,11 +559,11 @@ def sf1_spot() -> None:
     queries["q1_filter_scan"](spark, sf01).write.format("noop").mode(
         "overwrite"
     ).save()
+    from serverless_mapreduce_spark.catalog import table
+
     for d in (sf01, sf1):
         for t in ("documents", "embeddings"):
-            spark.read.parquet(os.path.join(d, f"{t}.parquet")).write.format(
-                "noop"
-            ).mode("overwrite").save()
+            table(spark, d, t).write.format("noop").mode("overwrite").save()
     from pyspark.sql import functions as F
 
     from serverless_mapreduce_spark.functions.vector import dot
@@ -634,6 +634,62 @@ def sf1_spot() -> None:
     print(json.dumps(result, separators=(",", ":")))
 
 
+#: Whoever runs the bench may keep only the last 2000 chars of stdout and
+#: parse the final line as JSON; the compact line stays under this, with
+#: room for the newline.
+COMPACT_BUDGET = 1950
+#: The widest value each optional metadata field can take. Their bytes are
+#: reserved before any query is placed, so whether a field is present never
+#: changes which queries the line carries.
+_COMPACT_META_MAX = {
+    "n_over_budget": len(HEADLINE),
+    "calib": 1.2,
+    "median_ratio_vs_anchor": -99.9999,
+}
+
+
+def compact_line(
+    total: float,
+    timings: dict[str, float],
+    *,
+    sf: float,
+    detail: str,
+    n_over_budget: int | None = None,
+    calib: float | None = None,
+    median_ratio_vs_anchor: float | None = None,
+) -> str:
+    """The one-line JSON result: total, metadata (a None field is left
+    out) and as many per-query times (HEADLINE priority order, 2 dp) as
+    fit in COMPACT_BUDGET chars."""
+    compact = {
+        "metric": "bench_total_sec",
+        "value": round(total, 3),
+        "unit": "sec",
+        "queries": {},
+        "sf": sf,
+        "n_queries": len(timings),
+        "detail": detail,
+    }
+    sep = (",", ":")
+    room = COMPACT_BUDGET - len(json.dumps({**compact, **_COMPACT_META_MAX}, separators=sep))
+    for name in HEADLINE:
+        if name not in timings:
+            continue
+        # '"name":1.23' plus the comma before every entry but the first
+        entry = len(json.dumps({name: round(timings[name], 2)}, separators=sep)) - 2
+        room -= entry + (1 if compact["queries"] else 0)
+        if room < 0:
+            break
+        compact["queries"][name] = round(timings[name], 2)
+    meta = {
+        "n_over_budget": n_over_budget,
+        "calib": calib,
+        "median_ratio_vs_anchor": median_ratio_vs_anchor,
+    }
+    compact.update({k: v for k, v in meta.items() if v is not None})
+    return json.dumps(compact, separators=sep)
+
+
 def main() -> None:
     if "--sf1-spot" in sys.argv:
         sf1_spot()
@@ -680,10 +736,10 @@ def main() -> None:
     # first query to touch each table otherwise absorbs its cold read
     # (measured: dedup_exact 2.1 s cold vs 0.33 s warm at sf0.1 — the delta
     # is the documents.parquet cold scan, not the dedup plan).
+    from serverless_mapreduce_spark.catalog import table
+
     for t in ("documents", "events", "embeddings", "lineitem", "orders"):
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
     # Warm the Python worker pool + Arrow path too: the first pandas_udf in
     # a session forks one worker per core (~4s on local[32]) — a fixed cost
     # a long-lived cluster pays once, not a property of any query's plan.
@@ -811,13 +867,12 @@ def main() -> None:
     # BENCH_r08 recorded dedup_decontaminate at 3.4 s where steady state is
     # ~1.0 s (r8 verdict adjudicated it as first-touch variance). One noop
     # materialization of each derivation pins every dedup line to its plan.
-    from serverless_mapreduce_spark.catalog import table as _table
     from serverless_mapreduce_spark.operators.dedup import (
         minhash_signatures,
         shingle_rows,
     )
 
-    _docs = _table(spark, sf_dir, "documents")
+    _docs = table(spark, sf_dir, "documents")
     minhash_signatures(_docs).write.format("noop").mode("overwrite").save()
     shingle_rows(_docs).write.format("noop").mode("overwrite").save()
 
@@ -910,8 +965,7 @@ def main() -> None:
     # is ~6 KB, so the metric line was truncated and BENCH_r05/r06 recorded
     # `parsed: null` despite rc=0 (r6 verdict). Emit the COMPLETE result to
     # BENCH_LOCAL.json (committed, judge-readable) and keep the stdout line
-    # under the tail budget: total + as many per-query entries (in HEADLINE
-    # priority order, 2 dp) as fit.
+    # under the tail budget (compact_line).
     full = {
         "metric": "bench_total_sec",
         "value": round(total, 3),
@@ -984,34 +1038,21 @@ def main() -> None:
     ) as f:
         json.dump(full, f, indent=1)
 
-    compact = {
-        "metric": "bench_total_sec",
-        "value": round(total, 3),
-        "unit": "sec",
-        "queries": {},
-        "sf": sf,
-        "n_queries": len(timings),
-        "detail": fname,
-    }
-    if "over_budget" in full:
-        compact["n_over_budget"] = len(full["over_budget"])
-    if calibration is not None:
-        compact["calib"] = calibration["scalar"]
-    if ratio_vs_anchor is not None:
-        compact["median_ratio_vs_anchor"] = ratio_vs_anchor[
-            "median_ratio_vs_anchor"
-        ]
-    budget = 1700  # < driver tail (2000) with headroom for the newline
-    for name in HEADLINE:
-        if name not in timings:
-            continue
-        trial = dict(compact["queries"])
-        trial[name] = round(timings[name], 2)
-        candidate = {**compact, "queries": trial}
-        if len(json.dumps(candidate, separators=(",", ":"))) > budget:
-            break
-        compact["queries"] = trial
-    print(json.dumps(compact, separators=(",", ":")))
+    print(
+        compact_line(
+            total,
+            timings,
+            sf=sf,
+            detail=fname,
+            n_over_budget=len(full["over_budget"]) if "over_budget" in full else None,
+            calib=calibration["scalar"] if calibration is not None else None,
+            median_ratio_vs_anchor=(
+                ratio_vs_anchor["median_ratio_vs_anchor"]
+                if ratio_vs_anchor is not None
+                else None
+            ),
+        )
+    )
 
 
 if __name__ == "__main__":

@@ -2,15 +2,26 @@
 
 The reference enumerates raw S3 objects and leaves schema to user map code +
 Hive DDL (``data_sources/input_handler_s3.py:51-70``, ``hive/Query1.q``).
-Here schema is first-class: tables are parquet with embedded schema, loaded
-once per (sf_dir, table) and registered as temp views so both the DataFrame
-and SQL surfaces see them.
+Here schema is first-class: tables are parquet with embedded schema, and
+:func:`table` reads each one against a process-wide schema memo, so only
+the first read of a file runs Spark's footer-scan inference job.
+
+The memo is keyed on the identity of its inputs (:func:`table_schema`):
+the table's real path, the size and ``st_mtime_ns`` of the file (or of
+every file under it, for a directory-form table), and the session's values
+of :data:`SCHEMA_CONFS`, the confs that change how parquet types map to
+Spark types. It misses, and inference runs again, whenever a file is
+rewritten, added or removed, or one of those confs changes. Paths that are
+not local files (object-store URIs) are never memoized.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -27,22 +38,81 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+#: SQL confs that change the Spark type a parquet column infers to; their
+#: session values are part of the schema memo's key
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    # which footers a directory-form table's schema is read from
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: (real path, conf values) -> (file identity, inferred schema). One entry
+#: per path and conf setting: a rewritten file replaces its entry rather
+#: than adding one. Single dict reads and writes need no lock; two threads
+#: racing on a miss both infer, and either result is right.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _file_identity(path: str) -> tuple:
+    """(relative name, size, mtime_ns) of ``path``, or of every file under
+    it when it is a directory. An os.stat/os.walk: no Spark job. Raises
+    OSError when ``path`` is not a local file or directory."""
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (("", st.st_size, st.st_mtime_ns),)
+    ident = []
+    for d, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            p = os.path.join(d, f)
+            fst = os.stat(p)
+            ident.append((os.path.relpath(p, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(ident)
+
+
+def _path(sf_dir: str, name: str) -> str:
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    return f"{sf_dir}/{name}.parquet"
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The Spark schema of one fixture table, inferred at most once per
+    (real path, file identity, :data:`SCHEMA_CONFS` values)."""
+    path = _path(sf_dir, name)
+    if name == "events":
+        # events.parquet has stored TIMESTAMP(NANOS), which Spark's parquet
+        # reader rejects outright. nanosAsLong is a runtime-settable SQL
+        # conf, so set it here rather than only in our session factory —
+        # callers (the driver's harness included) bring their own session.
+        # It is set before the memo key reads it.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try:
+        real = os.path.realpath(path)
+        ident = _file_identity(real)
+    except OSError:
+        return spark.read.parquet(path).schema  # not local: no identity, no memo
+    key = (real, tuple(spark.conf.get(c) for c in SCHEMA_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (ident, schema)
+    return schema
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Columnar scan → Catalyst prunes columns and
     pushes predicates into the parquet reader (check via PushedFilters /
-    ReadSchema in .explain)."""
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    ReadSchema in .explain). The schema comes from :func:`table_schema`,
+    so a repeat read of an unchanged file runs no Spark job."""
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(_path(sf_dir, name))
     if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS), which Spark's vectorized
-        # parquet reader rejects outright. nanosAsLong is a runtime-settable
-        # SQL conf, so set it here rather than only in our session factory —
-        # callers (the driver's harness included) bring their own session.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = df.withColumn("ts", _to_ntz(dict(df.dtypes).get("ts")))
+        df = df.withColumn("ts", _to_ntz(schema["ts"].dataType.simpleString()))
     return df
 
 

@@ -111,16 +111,15 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pinning happens on a CLONE when needed (utc_session) — never by
     mutating the caller's session conf mid-query.
 
-    The declared schema BRANCHES on the file's actual ts encoding (probed
-    with a batch footer read, the same dual-encoding contract as
+    The declared schema BRANCHES on the file's actual ts encoding (read
+    from the catalog's schema memo, the same dual-encoding contract as
     catalog._to_ntz): nanos fixtures stream ts as epoch-nanos BIGINT and
     convert; micros-NTZ fixtures stream TIMESTAMP_NTZ directly."""
-    from serverless_mapreduce_spark.catalog import _to_ntz
+    from serverless_mapreduce_spark.catalog import _to_ntz, table_schema
 
     spark = utc_session(spark)
-    # nanosAsLong is required even to PROBE a nanos file; inert for micros.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes).get("ts")
+    # table_schema sets nanosAsLong, required even to PROBE a nanos file
+    raw = table_schema(spark, sf_dir, "events")["ts"].dataType.simpleString()
     ts_ddl = "BIGINT" if raw == "bigint" else "TIMESTAMP_NTZ"
     stream = spark.readStream.schema(
         StructType.fromDDL(EVENTS_DDL.format(ts=ts_ddl))
