@@ -56,7 +56,7 @@ SCHEMA_CONFS = (
 _SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
 
 
-def _file_identity(path: str) -> tuple:
+def file_identity(path: str) -> tuple:
     """(relative name, size, mtime_ns) of ``path``, or of every file under
     it when it is a directory. An os.stat/os.walk: no Spark job. Raises
     OSError when ``path`` is not a local file or directory."""
@@ -92,7 +92,7 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
         real = os.path.realpath(path)
-        ident = _file_identity(real)
+        ident = file_identity(real)
     except OSError:
         return spark.read.parquet(path).schema  # not local: no identity, no memo
     key = (real, tuple(spark.conf.get(c) for c in SCHEMA_CONFS))

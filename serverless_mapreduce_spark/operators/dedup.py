@@ -29,13 +29,12 @@ aggregates for md5-bound work.
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from serverless_mapreduce_spark.artifacts import artifact
 from serverless_mapreduce_spark.caching import persist_tracked
 from serverless_mapreduce_spark.catalog import table
 from serverless_mapreduce_spark.registry import query
@@ -396,34 +395,18 @@ _SQL_PAIR_CTES = f"""
 """
 
 
-#: Session-lifetime memo for the VERIFIED near-dup pair table — the
-#: minhash family's shared artifact (VERDICT r11 item 3): dedup_minhash_lsh,
-#: dedup_cluster, and split_leakage_audit all consume the same
-#: signatures → bands → guarded candidates → exact-Jaccard derivation, and
-#: each used to rebuild it from scratch (the hot-band guard's cardinality
-#: aggregate per query was the measured +1.7-2.1 s/line cost). Keyed and
-#: locked per the _WALK_MEMO discipline (applicationId + shuffle-partitions
-#: + sf_dir; lock held ACROSS the build so concurrent family queries can't
-#: duplicate it). Deliberately NOT release_cached()-scoped: at 100 TB this
-#: is the written pair table a dedup run materializes once per corpus
-#: version; here the checkpoint frees with the SparkContext.
-_PAIRS_MEMO: dict = {}
-_PAIRS_BUILD_LOCK = threading.RLock()
-
-
+@artifact("dedup_verified_pairs", inputs=("documents",))
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    memo_key = (
-        spark.sparkContext.applicationId,
-        spark.conf.get("spark.sql.shuffle.partitions", ""),
-        sf_dir,
-    )
-    with _PAIRS_BUILD_LOCK:
-        cached = _PAIRS_MEMO.get(memo_key)
-        if cached is not None:
-            return cached
-        result = _build_verified_pairs(spark, sf_dir).localCheckpoint()
-        _PAIRS_MEMO[memo_key] = result
-        return result
+    """The VERIFIED near-dup pair table — the minhash family's shared
+    artifact (VERDICT r11 item 3): dedup_minhash_lsh, dedup_cluster, and
+    split_leakage_audit all consume the same signatures → bands → guarded
+    candidates → exact-Jaccard derivation, and each used to rebuild it
+    from scratch (the hot-band guard's cardinality aggregate per query was
+    the measured +1.7-2.1 s/line cost). Deliberately NOT
+    release_cached()-scoped: at 100 TB this is the written pair table a
+    dedup run materializes once per corpus version; here the checkpoint
+    frees with the SparkContext."""
+    return _build_verified_pairs(spark, sf_dir).localCheckpoint()
 
 
 def _jaccard_sets(sh_a: str, sh_b: str) -> Column:
@@ -481,7 +464,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the self-join (shuffle keyed by (band_idx, band_hash)), then exact
     Jaccard verifies candidates. Sub-quadratic: cost ∝ docs·bands +
     collisions, never N². Serves the session-shared verified-pair table
-    (:data:`_PAIRS_MEMO`) — built once, reused by the whole minhash
+    (:func:`_verified_pairs`) — built once, reused by the whole minhash
     family."""
     return _verified_pairs(spark, sf_dir)
 
@@ -554,7 +537,7 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     # superseded generation goes out of scope; on a real cluster prefer
     # reliable checkpoint() to a directory (localCheckpoint does not survive
     # executor loss).
-    # the pair table itself is the session-shared checkpoint (_PAIRS_MEMO);
+    # the pair table itself is the session-shared checkpoint (_verified_pairs);
     # selecting off it keeps lineage flat without a second materialization
     pairs = _verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
     # Size the iteration to the PAIR GRAPH, not the corpus: near-dup edges

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from serverless_mapreduce_spark.artifacts import artifact
 from serverless_mapreduce_spark.catalog import table
 from serverless_mapreduce_spark.registry import query
 
@@ -557,70 +558,28 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(merges, "rnk bigint, pair string, cnt bigint")
 
 
-#: Session-lifetime memo for the learned merge list, keyed by
-#: (applicationId, shuffle-partition setting, sf_dir): three registered
-#: queries ride the same {BPE_N_MERGES}-round trainer (bpe_train_merges
-#: returns the table, bpe_encode_docs applies it, bpe_fertility_by_lang
-#: rides the encode), and a driver pass running them should pay the
-#: corpus scan + training loop ONCE — the _DSIR_MEMO/graph-artifact
-#: discipline. The memoized value is a driver-small plain-Python list,
-#: and the merge sequence is bit-deterministic under any partitioning
-#: (exact integer counts, total-order tie-break), so reuse can never
-#: change a result; the partitions key is kept anyway to match the house
-#: memo discipline (each config derives its own copy).
-_MERGES_MEMO: dict = {}
-_MERGES_LOCK = __import__("threading").RLock()
-
-
-def _session_data_key(
-    spark: SparkSession, sf_dir: str, table_name: str
-) -> tuple:
-    """Session-memo key for an artifact derived from one fixture table:
-    (applicationId, shuffle partitions, sf_dir, source file identity).
-    The file identity (size, mtime_ns — an os.stat, no Spark job) is the
-    r17-advice fix for both session memos below: the sf_dir path alone
-    cannot see a REGENERATED fixture, so a table rebuilt within one
-    session would silently serve the stale artifact. A non-file layout
-    (no ``<table>.parquet``) keys on the path alone, as before."""
-    import os as _os
-
-    src = _os.path.join(sf_dir, f"{table_name}.parquet")
-    try:
-        st = _os.stat(src)
-        data_fp: tuple | None = (st.st_size, st.st_mtime_ns)
-    except OSError:
-        data_fp = None
-    return (
-        spark.sparkContext.applicationId,
-        spark.conf.get("spark.sql.shuffle.partitions", ""),
-        sf_dir,
-        data_fp,
-    )
-
-
+@artifact("bpe_merges", inputs=("documents",))
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int]]:
     """Build the space-wrapped distinct-word frame and run the
-    {BPE_N_MERGES}-round trainer over it, memoized per session (see
-    _MERGES_MEMO). The corpus scan happens exactly once per (session,
-    sf_dir); the returned list is the trainer's exact output."""
-    memo_key = _session_data_key(spark, sf_dir, "documents")
-    with _MERGES_LOCK:
-        cached = _MERGES_MEMO.get(memo_key)
-        if cached is not None:
-            return cached
-        wf = (
-            table(spark, sf_dir, "documents")
-            .select(
-                F.explode(F.split(F.lower("text"), TOKEN_SPLIT_RE)).alias("w")
-            )
-            .filter(F.length("w") >= 2)
-            .groupBy("w")
-            .agg(F.count("*").alias("freq"))
-            .select(F.regexp_replace("w", "(.)", " $1 ").alias("seq"), "freq")
-        ).localCheckpoint(eager=True)
-        merges = _learn_merges(wf)
-        _MERGES_MEMO[memo_key] = merges
-        return merges
+    {BPE_N_MERGES}-round trainer over it; the returned list is the
+    trainer's exact output. Three registered queries ride the same
+    trainer (bpe_train_merges returns the table, bpe_encode_docs applies
+    it, bpe_fertility_by_lang rides the encode), so a pass running
+    them pays the corpus scan + training loop ONCE. The value is a
+    driver-small plain-Python list, and the merge sequence is
+    bit-deterministic under any partitioning (exact integer counts,
+    total-order tie-break)."""
+    wf = (
+        table(spark, sf_dir, "documents")
+        .select(
+            F.explode(F.split(F.lower("text"), TOKEN_SPLIT_RE)).alias("w")
+        )
+        .filter(F.length("w") >= 2)
+        .groupBy("w")
+        .agg(F.count("*").alias("freq"))
+        .select(F.regexp_replace("w", "(.)", " $1 ").alias("seq"), "freq")
+    ).localCheckpoint(eager=True)
+    return _learn_merges(wf)
 
 
 def _learn_merges(wf: DataFrame) -> list[tuple[int, str, int]]:
@@ -1427,18 +1386,6 @@ _DSIR_CTES = f"""
 """
 
 
-#: Session-lifetime memo for the materialized DSIR score table, keyed by
-#: (applicationId, shuffle-partition setting, sf_dir): both dsir queries
-#: are projections of one derivation, and a driver pass running both
-#: should pay the scan+explode+hash+aggregate chain ONCE — the graph
-#: family's maintained-artifact pattern. The shuffle-partition key keeps
-#: the partition-invariance test meaningful (each partitioning derives
-#: its own copy rather than reusing the other's checkpoint). The table is
-#: per-raw-document-small (thousands of rows at test scales), so holding
-#: the checkpoint for the session is free.
-_DSIR_MEMO: dict = {}
-_DSIR_LOCK = __import__("threading").RLock()
-
 _DSIR_INT64_MAX = (1 << 63) - 1
 
 
@@ -1480,21 +1427,17 @@ def _dsir_int64_headroom(
         )
 
 
+@artifact("dsir_scores", inputs=("documents",))
 def _dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-raw-document DSIR scores (doc_id, source, n_ngrams,
     sum_ratio_ppm, mean_ratio_ppm) — the Spark twin of the shared
     ``_DSIR_CTES`` chain; both registered dsir queries are projections of
-    this one derivation, memoized per session like the graph artifacts.
-    See dsir_importance_weights for the full design and exactness
-    argument."""
-    memo_key = _session_data_key(spark, sf_dir, "documents")
-    with _DSIR_LOCK:
-        cached = _DSIR_MEMO.get(memo_key)
-        if cached is not None:
-            return cached
-        result = _build_dsir_scores(spark, sf_dir).localCheckpoint(eager=True)
-        _DSIR_MEMO[memo_key] = result
-        return result
+    this one derivation, so a pass running both pays the
+    scan+explode+hash+aggregate chain ONCE. The table is
+    per-raw-document-small (thousands of rows at test scales), so holding
+    the checkpoint for the session is free. See dsir_importance_weights
+    for the full design and exactness argument."""
+    return _build_dsir_scores(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def _build_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

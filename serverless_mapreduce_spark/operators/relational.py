@@ -29,11 +29,10 @@ in Spark and DuckDB (see registry.py docstring).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from serverless_mapreduce_spark.artifacts import saved_table
 from serverless_mapreduce_spark.catalog import table
 from serverless_mapreduce_spark.registry import query
 
@@ -655,44 +654,23 @@ _REVENUE_DEC = (
 )
 
 
-def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write orders/lineitem bucketed + sorted by the join key (once per
-    session+sf), as EXTERNAL tables under the repo's .scratch — an explicit
-    ``path`` rather than the session warehouse, whose default location
-    follows the caller's cwd. This is exactly the layout a 100 TB
-    deployment maintains for its fact tables: both sides hash-bucketed
-    into the same bucket count, so every future equi-join on the key is
-    Exchange-free — the shuffle is paid once at write time, not per query.
-    Reference parity: the reference's shuffle stage writes
-    hash-partitioned intermediates to S3 per job (job/shuffle_handler.py)
-    — bucketing is that same hash layout made durable and reusable."""
-    import shutil
+@saved_table("orders_bkt", inputs=("orders",), by="o_orderkey", buckets=BUCKETS)
+def _orders_bkt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """orders bucketed + sorted by the join key, written once per session
+    and fixture. This is exactly the layout a 100 TB deployment maintains
+    for its fact tables: both sides hash-bucketed into the same bucket
+    count, so every future equi-join on the key is Exchange-free — the
+    shuffle is paid once at write time, not per query. Reference parity:
+    the reference's shuffle stage writes hash-partitioned intermediates to
+    S3 per job (job/shuffle_handler.py) — bucketing is that same hash
+    layout made durable and reusable."""
+    return table(spark, sf_dir, "orders")
 
-    from serverless_mapreduce_spark.paths import scratch, sf_tag
 
-    # sf_tag (not basename): table names key the session-scoped catalog
-    # cache, so two sf_dirs sharing a basename must not share tables.
-    tag = sf_tag(sf_dir)
-    names = (f"orders_bkt_{tag}", f"lineitem_bkt_{tag}")
-    base = scratch("bucketed")
-    for tbl, src, key in (
-        (names[0], "orders", "o_orderkey"),
-        (names[1], "lineitem", "l_orderkey"),
-    ):
-        if not spark.catalog.tableExists(tbl):
-            # Table metadata is session-scoped but the files are not:
-            # clear any location orphaned by a previous session first.
-            loc = os.path.join(base, tbl)
-            shutil.rmtree(loc, ignore_errors=True)
-            (
-                table(spark, sf_dir, src)
-                .write.bucketBy(BUCKETS, key)
-                .sortBy(key)
-                .option("path", loc)
-                .mode("overwrite")
-                .saveAsTable(tbl)
-            )
-    return names
+@saved_table("lineitem_bkt", inputs=("lineitem",), by="l_orderkey", buckets=BUCKETS)
+def _lineitem_bkt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem bucketed + sorted by the join key; see :func:`_orders_bkt`."""
+    return table(spark, sf_dir, "lineitem")
 
 
 @query(
@@ -715,9 +693,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture from taking the broadcast path that would bypass the layout
     being demonstrated. Revenue math in decimal so the sum is exact and
     order-independent (registry.py contract)."""
-    orders_t, lineitem_t = _bucketed_tables(spark, sf_dir)
-    o = spark.table(orders_t)
-    l = spark.table(lineitem_t)  # noqa: E741
+    o = _orders_bkt(spark, sf_dir)
+    l = _lineitem_bkt(spark, sf_dir)  # noqa: E741
     revenue = F.col("l_extendedprice").cast("decimal(18,2)") * (
         F.lit(1) - F.col("l_discount").cast("decimal(18,2)")
     )

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from serverless_mapreduce_spark.artifacts import artifact
 from serverless_mapreduce_spark.caching import persist_tracked
 from serverless_mapreduce_spark.catalog import ensure_parallelism, table
 from serverless_mapreduce_spark.functions.vector import (
@@ -1241,53 +1242,33 @@ SEMDEDUP_EPS = 0.3   #: prune a vector whose cosine to a kept lower-id member >=
 SEMDEDUP_CAP = 64    #: each vector compares against at most this many lower-id
 #: cluster members — O(N * CAP) pairs corpus-wide, never quadratic in a cluster.
 
-#: session-lifetime memo for the checkpointed IVF cell assignment, keyed by
-#: (applicationId, shuffle-partitions, sf_dir) like graph._WALK_MEMO /
-#: nlp._DSIR_MEMO: semdedup_prune, label_knn_disagreement and ann_ivf_topk
-#: all consume the same deterministic (vec_id, embedding[, label],
-#: centroid, rn) table, so it is a maintained artifact built once per
-#: session — at 100 TB it would be a table written partitioned by
-#: centroid. NOT persist_tracked (per-query release would unpersist a
-#: memoized frame); the localCheckpoint frees with the SparkContext.
-_IVF_MEMO: dict = {}
-_IVF_BUILD_LOCK = __import__("threading").RLock()
-
-
+@artifact("ivf_ranked", inputs=("embeddings",))
 def _ivf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic IVF cell assignment + within-cell vec_id rank —
     (vec_id, embedding[, label], centroid, rn). The `label` column rides
-    along when the fixture has one (crafted corpora may not). The build
-    lock is held across the whole derivation (check-then-act is racy —
-    the r7 walk-memo lesson)."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        spark.conf.get("spark.sql.shuffle.partitions", ""),
-        sf_dir,
+    along when the fixture has one (crafted corpora may not).
+    semdedup_prune, label_knn_disagreement and ann_ivf_topk all consume
+    this one table; at 100 TB it would be a table written partitioned by
+    centroid. NOT persist_tracked (per-query release would unpersist a
+    memoized frame); the localCheckpoint frees with the SparkContext."""
+    emb = ensure_parallelism(spark, table(spark, sf_dir, "embeddings"), "vec_id")
+    cent = emb.filter(F.col("vec_id") % CENTROID_MOD == 0).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
     )
-    with _IVF_BUILD_LOCK:
-        cached = _IVF_MEMO.get(memo_key)
-        if cached is not None:
-            return cached
-        emb = ensure_parallelism(spark, table(spark, sf_dir, "embeddings"), "vec_id")
-        cent = emb.filter(F.col("vec_id") % CENTROID_MOD == 0).select(
-            F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-        )
-        w_rank = Window.partitionBy("centroid").orderBy("vec_id")
-        extra = ["label"] if "label" in emb.columns else []
-        # assignment via the batched closure UDF (_centroid_assigner):
-        # the codebook rides the task closure and each embedding crosses
-        # the Python boundary once — no corpus × codebook join expansion
-        # and no argmax exchange at all; cosine bits and the lowest-c_id
-        # tie-break are identical to the former aggregate (r18, pinned
-        # by tests/test_round18_opt.py). label rides the row unchanged.
-        result = (
-            _centroid_assigner(cent)(emb, keep=tuple(extra))
-            .select("vec_id", "embedding", *extra, "centroid")
-            .withColumn("rn", F.row_number().over(w_rank))
-            .localCheckpoint()
-        )
-        _IVF_MEMO[memo_key] = result
-        return result
+    w_rank = Window.partitionBy("centroid").orderBy("vec_id")
+    extra = ["label"] if "label" in emb.columns else []
+    # assignment via the batched closure UDF (_centroid_assigner):
+    # the codebook rides the task closure and each embedding crosses
+    # the Python boundary once — no corpus × codebook join expansion
+    # and no argmax exchange at all; cosine bits and the lowest-c_id
+    # tie-break are identical to the former aggregate (r18, pinned
+    # by tests/test_round18_opt.py). label rides the row unchanged.
+    return (
+        _centroid_assigner(cent)(emb, keep=tuple(extra))
+        .select("vec_id", "embedding", *extra, "centroid")
+        .withColumn("rn", F.row_number().over(w_rank))
+        .localCheckpoint()
+    )
 
 
 @query(

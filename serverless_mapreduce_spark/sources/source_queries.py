@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from serverless_mapreduce_spark.artifacts import artifact
 from serverless_mapreduce_spark.catalog import table
 from serverless_mapreduce_spark.registry import query
 from serverless_mapreduce_spark.session import utc_session
@@ -320,6 +321,36 @@ def csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 DPP_QUARTER = "1995Q2"
 
 
+@artifact("dpp_layout", inputs=("orders",))
+def _dpp_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """(fact dir, dim dir) for join_dpp_pruned_fact: orders partitioned by
+    month, and the month-dim carrying the quarter attribute the filter
+    lands on."""
+    fact_dir = scratch(sf_tag(sf_dir), "dpp", "orders_by_month")
+    dim_dir = scratch(sf_tag(sf_dir), "dpp", "month_dim")
+    orders = table(spark, sf_dir, "orders").withColumn(
+        "month", F.date_format("o_orderdate", "yyyy-MM")
+    )
+    orders.write.mode("overwrite").partitionBy("month").parquet(fact_dir)
+    (
+        orders.select("month")
+        .distinct()
+        .withColumn(
+            "quarter",
+            F.concat(
+                F.substring("month", 1, 4),
+                F.lit("Q"),
+                ((F.substring("month", 6, 2).cast("int") + 2) / 3)
+                .cast("int")
+                .cast("string"),
+            ),
+        )
+        .write.mode("overwrite")
+        .parquet(dim_dir)
+    )
+    return fact_dir, dim_dir
+
+
 @query(
     "join_dpp_pruned_fact",
     priority=0,
@@ -345,37 +376,11 @@ def join_dpp_pruned_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query; DPP covers the star-schema reality where selectivity arrives
     through a dimension — at 100 TB a 3-of-80-months quarter join reads
     3/80ths of the fact with NO change to the query text. Both scratch
-    tables are maintained artifacts (built once per session+sf, like the
-    bucketed facts): the fact partitioned by month, the month-dim carrying
-    the quarter attribute the filter lands on. The plan-shape pytest pins
-    ``dynamicpruningexpression`` into the fact scan; the oracle recomputes
-    from raw orders with the quarter unrolled arithmetically."""
-    import threading
-
-    fact_dir = scratch(sf_tag(sf_dir), "dpp", "orders_by_month")
-    dim_dir = scratch(sf_tag(sf_dir), "dpp", "month_dim")
-    with _DPP_BUILD_LOCK:
-        if not os.path.exists(os.path.join(fact_dir, "_SUCCESS")):
-            orders = table(spark, sf_dir, "orders").withColumn(
-                "month", F.date_format("o_orderdate", "yyyy-MM")
-            )
-            orders.write.mode("overwrite").partitionBy("month").parquet(fact_dir)
-            (
-                orders.select("month")
-                .distinct()
-                .withColumn(
-                    "quarter",
-                    F.concat(
-                        F.substring("month", 1, 4),
-                        F.lit("Q"),
-                        ((F.substring("month", 6, 2).cast("int") + 2) / 3)
-                        .cast("int")
-                        .cast("string"),
-                    ),
-                )
-                .write.mode("overwrite")
-                .parquet(dim_dir)
-            )
+    tables come from the :func:`_dpp_layout` artifact. The plan-shape
+    pytest pins ``dynamicpruningexpression`` into the fact scan; the
+    oracle recomputes from raw orders with the quarter unrolled
+    arithmetically."""
+    fact_dir, dim_dir = _dpp_layout(spark, sf_dir)
     fact = spark.read.parquet(fact_dir)
     dim = spark.read.parquet(dim_dir).filter(F.col("quarter") == DPP_QUARTER)
     return (
@@ -390,9 +395,6 @@ def join_dpp_pruned_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_cents"),
         )
     )
-
-
-_DPP_BUILD_LOCK = __import__("threading").Lock()
 
 
 @query("sink_roundtrip_orc", priority=150, oracle=_AGG_ORACLE)

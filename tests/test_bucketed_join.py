@@ -5,9 +5,11 @@ bucketed write once)."""
 from __future__ import annotations
 
 from serverless_mapreduce_spark.operators.relational import (
-    _bucketed_tables,
+    _lineitem_bkt,
+    _orders_bkt,
     join_bucketed_colocated,
 )
+from serverless_mapreduce_spark.paths import sf_tag
 
 
 def test_bucketed_join_has_no_exchange_on_join_inputs(spark, sf_dir):
@@ -24,8 +26,9 @@ def test_bucketed_join_has_no_exchange_on_join_inputs(spark, sf_dir):
 
 
 def test_bucketed_tables_are_reused(spark, sf_dir):
-    a = _bucketed_tables(spark, sf_dir)
-    b = _bucketed_tables(spark, sf_dir)  # second call: no rewrite, same names
-    assert a == b
-    for t in a:
-        assert spark.catalog.tableExists(t)
+    for bkt in (_orders_bkt, _lineitem_bkt):
+        first = bkt(spark, sf_dir)
+        assert bkt.built(spark, sf_dir)  # second call: no rewrite
+        again = bkt(spark, sf_dir)
+        assert spark.catalog.tableExists(f"{bkt.name}_{sf_tag(sf_dir)}")
+        assert first.count() == again.count() > 0

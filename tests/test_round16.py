@@ -252,10 +252,12 @@ def test_metrics_summary_shares_triangle_memo(spark):
     from pyspark.sql import functions as F
 
     import serverless_mapreduce_spark.operators.graph as G
+    from serverless_mapreduce_spark import artifacts
 
     sf_dir = "/root/testdata/sf0.001"
+    artifacts.clear("graph_triangle_scalars")
     tri_df = G.graph_triangles(spark, sf_dir).collect()[0]
-    assert G._TRI_MEMO  # first call populated the memo
+    assert G._triangle_scalars.built(spark, sf_dir)  # first call built it
     summary = G.graph_metrics_summary(spark, sf_dir).collect()[0]
     assert summary["n_triangles"] == tri_df["n_triangles"]
     assert summary["n_nodes"] == tri_df["n_nodes"]

@@ -164,20 +164,17 @@ def test_merge_into_two_key_null_dup_parity(spark, tmp_path):
 
 
 def test_bpe_merges_memo_hit_and_parity(spark, sf_dir):
-    """The session merge-list memo (nlp._MERGES_MEMO) must return the
+    """The session merge-list artifact (``bpe_merges``) must return the
     trainer's exact output on a cold build, and the three BPE queries
     must share one training per (session, sf_dir): a second call is a
     memo hit (same object, no recompute)."""
+    from serverless_mapreduce_spark import artifacts
     from serverless_mapreduce_spark.operators import nlp
 
-    key = (
-        spark.sparkContext.applicationId,
-        spark.conf.get("spark.sql.shuffle.partitions", ""),
-        sf_dir,
-    )
-    with nlp._MERGES_LOCK:
-        nlp._MERGES_MEMO.pop(key, None)
+    artifacts.clear("bpe_merges")
+    assert not nlp._trained_merges.built(spark, sf_dir)
     cold = nlp._trained_merges(spark, sf_dir)
+    assert nlp._trained_merges.built(spark, sf_dir)  # the cold call built
     warm = nlp._trained_merges(spark, sf_dir)
     assert warm is cold  # memo hit — training ran once
     # parity with an independent, memo-free training on a fresh frame
