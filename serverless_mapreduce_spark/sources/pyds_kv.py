@@ -12,16 +12,19 @@ CONTRACT: a first-class ``spark.read.format("typedkv")`` connector that
   "123"}}`` wire shape DynamoDB uses),
 - declares its schema from a column spec option (``name:tag:sqltype,...``
   — the analog of INPUT_COLUMNS_DYNAMODB),
-- splits one :class:`InputPartition` per file so the scan parallelizes
-  across executors exactly like the reference's one-Lambda-per-key fanout,
+- plans one unit per file and packs the plan into Spark-sized splits
+  (``splits.pack``) — the reference's size-bounded mapper batches
+  (``utils/lambda_utils.py``) rather than one Lambda per key, since a
+  Python task costs a fixed ~60 ms whatever its work,
 - and implements ``pushFilters`` so equality/IsNotNull predicates are
   evaluated INSIDE the source before rows reach Spark — the moral
   equivalent of the reference's server-side projection/filter push
   (``read_value``'s ProjectionExpression, :171-213): at 100 TB the win is
   rows never serialized into the engine, not rows filtered after the scan.
 
-Scale notes: the per-file partitioning means planning is O(files) and each
-task streams one file (in production, one S3 key range). Decoding is
+Scale notes: planning is O(files) (one listing plus a stat per file) and
+each task streams the files of its split in listing order, one at a time
+(in production, a run of S3 keys). Decoding is
 ARROW-NATIVE: ``pyarrow.json.read_json`` parses the nested wire shape at C
 speed, tag extraction/casts/pushed filters run as Arrow compute kernels,
 and ``read`` yields whole ``RecordBatch``es — the Spark 4 Python DataSource
@@ -48,6 +51,14 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from serverless_mapreduce_spark.sources.splits import (
+    PlannedFile,
+    SplitConf,
+    bind_session,
+    pack,
+    planned,
+)
+
 
 def _parse_spec(spec: str) -> list[tuple[str, str, str]]:
     """``"event_id:N:bigint,event_type:S:string"`` → [(name, tag, sqltype)]."""
@@ -70,8 +81,9 @@ def _pa_type(sqltype: str):
 
 
 class TypedKVReader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, split_conf: SplitConf = SplitConf()):
         self.path = options["path"]
+        self.split_conf = split_conf
         self.spec = _parse_spec(options["columns"])
         self._pushed: list[tuple[str, object]] = []   # (col, required value|None)
 
@@ -88,14 +100,24 @@ class TypedKVReader(DataSourceReader):
                 yield f
 
     def partitions(self) -> list[InputPartition]:
+        """The file plan packed into Spark-sized splits (``splits.pack``)."""
+        return pack(self.file_plan(), self.split_conf)
+
+    def file_plan(self) -> list[PlannedFile]:
+        """One unit per wire file (its path), in name order, sized by a stat."""
         files = sorted(
             os.path.join(self.path, f)
             for f in os.listdir(self.path)
             if not f.startswith(("_", "."))
         )
-        return [InputPartition(f) for f in files]
+        return [planned(f, f) for f in files]
 
     def read(self, partition: InputPartition):
+        """Decode each wire file of one split, in plan order."""
+        for path in partition.value:
+            yield from self._read_file(path)
+
+    def _read_file(self, path: str):
         """Arrow-batch decode of one wire file.
 
         pyarrow.json parses the NDJSON into ``struct<tag: string>`` columns
@@ -107,13 +129,13 @@ class TypedKVReader(DataSourceReader):
         import pyarrow.compute as pc
         import pyarrow.json as pj
 
-        if os.path.getsize(partition.value) == 0:
+        if os.path.getsize(path) == 0:
             return
         # blank-line tolerance (the per-row reader's `line.strip()` contract):
         # pyarrow.json rejects empty AND whitespace-only lines and chokes on
         # CR, so normalize when any line needs it — skipping only the
         # trailing empty split artifact — keeping the common case zero-copy
-        with open(partition.value, "rb") as fh:
+        with open(path, "rb") as fh:
             data = fh.read()
         lines = data.split(b"\n")
         if b"\r" in data or any(not ln.strip() for ln in lines[:-1]):
@@ -164,6 +186,9 @@ class TypedKVDataSource(DataSource):
     def name(cls) -> str:
         return "typedkv"
 
+    #: Spark's file-split inputs; ``register`` binds the session's
+    split_conf = SplitConf()
+
     def schema(self) -> str:
         # a DDL string, not StructType.fromDDL: schema() executes in an
         # isolated Python worker with no SparkSession to parse DDL through
@@ -172,18 +197,19 @@ class TypedKVDataSource(DataSource):
         )
 
     def reader(self, schema: StructType) -> TypedKVReader:
-        return TypedKVReader(dict(self.options))
+        return TypedKVReader(dict(self.options), self.split_conf)
 
 
 def register(spark) -> None:
-    """Idempotent per-session registration."""
-    spark.dataSource.register(TypedKVDataSource)
+    """Idempotent per-session registration, binding the session's split
+    inputs (``splits.bind_session``)."""
+    spark.dataSource.register(bind_session(TypedKVDataSource, spark))
 
 
 # --- registered correctness query ---------------------------------------------
 
 EVENTS_SPEC = "event_id:N:bigint,user_id:N:bigint,event_type:S:string,value:N:double"
-KV_FILES = 8  #: fixture files → reader partitions (the per-key fanout analog)
+KV_FILES = 8  #: fixture files, packed into reader splits by ``splits.pack``
 
 
 from serverless_mapreduce_spark.artifacts import artifact  # noqa: E402
@@ -243,7 +269,7 @@ def typedkv_scan(spark, sf_dir: str):
     The oracle runs the same predicate over the parquet events table, so a
     connector decode or pushdown bug fails the hash, not just a row count.
     tests/test_pyds_kv.py pins the pushdown contract itself (accepted vs
-    returned filters, partition fanout, null/missing-attribute decode)."""
+    returned filters, split packing, null/missing-attribute decode)."""
     from pyspark.sql import functions as F
 
     path = _write_typed_fixture(spark, sf_dir)

@@ -17,7 +17,7 @@ Surface:
   planned, let alone opened. Every filter is also RETURNED to Spark
   (pruning is file-granular; Spark applies the row-level residual),
   so pushdown can only remove whole files, never rows it shouldn't;
-- merge-on-read deletes applied inside the source: ``partitions()``
+- merge-on-read deletes applied inside the source: ``file_plan()``
   plans each data file with exactly the delete-key files whose
   sequence number supersedes it (the Iceberg sequence rule —
   identical to the library's ``_read_with_deletes`` grouping), and
@@ -28,13 +28,15 @@ Surface:
   contract, re-implemented Arrow-side).
 
 Scale: planning is manifest-only (one JSON + the summaries it
-carries); one :class:`InputPartition` per data file parallelizes the
-scan per file across executors; ``read`` yields ``RecordBatch``es
-straight from the parquet reader — no per-row Python anywhere
-(the pyds_kv.py discipline). Reference analog: none — the reference
-re-lists and re-reads whole S3 prefixes per job
-(``driver/driver.py``); this is the planned, pruned, versioned scan
-that replaces that at 100 TB.
+carries), sizing each file from its recorded ``bytes``; ``partitions``
+packs that per-file plan into Spark-sized splits (``splits.pack``:
+Spark's file-split rule over contiguous runs of plan order), so a scan
+runs about one task wave, not one ~60 ms Python task per file; ``read``
+yields ``RecordBatch``es straight from the parquet reader for each file
+of its split — no per-row Python anywhere (the pyds_kv.py discipline).
+Reference analog: none — the reference re-lists and re-reads whole S3
+prefixes per job (``driver/driver.py``); this is the planned, pruned,
+versioned scan that replaces that at 100 TB.
 """
 
 from __future__ import annotations
@@ -62,9 +64,20 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from serverless_mapreduce_spark.sources.snapshot_stream import (
+    aligned,
+    source_schema,
+)
 from serverless_mapreduce_spark.sources.snapshots import (
     SnapshotTable,
     hive_partition_value,
+)
+from serverless_mapreduce_spark.sources.splits import (
+    PlannedFile,
+    SplitConf,
+    bind_session,
+    pack,
+    planned,
 )
 
 
@@ -109,15 +122,21 @@ def _resolve_version(t: SnapshotTable, opts: dict) -> int:
 class SnapshotBatchReader(DataSourceReader):
     """Manifest-planned batch reader over one resolved table version.
 
-    Holds only the table path, resolved version, pinned schema, and the
-    pushed pruning probes — a live SnapshotTable is planning state and
-    is dropped from the executor pickle."""
+    Holds only the table path, resolved version, pinned schema, split
+    inputs and the pushed pruning probes — a live SnapshotTable is
+    planning state and is dropped from the executor pickle."""
 
-    def __init__(self, options: dict, schema: StructType):
+    def __init__(
+        self,
+        options: dict,
+        schema: StructType,
+        split_conf: SplitConf = SplitConf(),
+    ):
         opts = {k.lower(): v for k, v in options.items()}
         self._base = opts["path"]
         self._version = _resolve_version(SnapshotTable(self._base), opts)
         self._schema = schema
+        self._split_conf = split_conf
         # logical -> physical column mapping pinned with the version
         # (rename/drop without rewrite): pushed probes translate before
         # touching manifest keys; the Arrow read aliases physical ->
@@ -371,85 +390,69 @@ class SnapshotBatchReader(DataSourceReader):
         return entries
 
     def partitions(self) -> list[InputPartition]:
-        """One partition per planned data file, each carrying exactly
-        the delete-key files that supersede it (delete seq > data seq —
-        the library's ``_read_with_deletes`` grouping, shipped to the
-        executor as (path, [(delete_path, key_cols), ...])). Under
-        ``readChangeFeed`` the plan is instead the library's
-        ``plan_changes`` walk: one partition per change-volume file,
-        tagged (change_type, commit_version, commit_ts)."""
+        """The file plan packed into Spark-sized splits (``splits.pack``)."""
+        return pack(self.file_plan(), self._split_conf)
+
+    def file_plan(self) -> list[PlannedFile]:
+        """One unit per planned data file, carrying exactly the
+        delete-key files that supersede it (delete seq > data seq — the
+        library's ``_read_with_deletes`` grouping, shipped to the
+        executor as (path, [(delete_path, key_cols), ...])) and sized
+        from the manifest. Under ``readChangeFeed`` the plan is instead
+        the library's ``plan_changes`` walk: one
+        ("cdf", path, change_type, commit_version, commit_ts) unit per
+        change-volume file, sized from the manifest where it records
+        bytes."""
         t = self._table()
         if self._change_feed:
             return [
-                InputPartition(("cdf", p, ctype, v, ts))
-                for paths, ctype, v, ts in t.plan_changes(
+                planned(("cdf", p, ctype, v, ts), p, nbytes)
+                for files, ctype, v, ts in t.plan_changes(
                     self._cf_start, self._cf_end
                 )
-                for p in paths
+                for p, nbytes in files
             ]
-        dels = t._delete_entries(self._version)
+        dels = sorted(t._delete_entries(self._version), key=lambda d: d["path"])
         out = []
         for e in self._planned_entries():
             appl = tuple(
                 (d["path"], tuple(d["keys"]))
-                for d in sorted(dels, key=lambda d: d["path"])
+                for d in dels
                 if d["_seq"] > e.get("_seq", 0)
             )
-            out.append(InputPartition((e["path"], appl)))
+            out.append(planned((e["path"], appl), e["path"], e.get("bytes")))
         return out
 
     # -- execution ---------------------------------------------------------
 
     def read(self, partition: InputPartition) -> Iterator:
-        """Arrow read of one data file aligned to the pinned schema
-        (absent pre-evolution columns filled with NULLs), with the
-        partition's applicable merge-on-read deletes anti-joined out as
-        Arrow compute — the engine receives only live rows."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+        """Arrow read of each file of one split, in plan order, aligned
+        to the pinned schema (``snapshot_stream.aligned``: absent
+        pre-evolution columns filled with NULLs; change-feed units get
+        their constant CDF columns)."""
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
         target = to_arrow_schema(self._schema)
-        if self._change_feed:
-            _tag, path, ctype, cver, cts = partition.value
-            raw = pq.read_table(path)
-            cols = []
-            for field in target:
-                if field.name == "_change_type":
-                    cols.append(
-                        pa.array([ctype] * raw.num_rows, type=field.type)
-                    )
-                elif field.name == "_commit_version":
-                    cols.append(
-                        pa.array([cver] * raw.num_rows, type=field.type)
-                    )
-                elif field.name == "_commit_timestamp":
-                    cols.append(
-                        pa.array([cts] * raw.num_rows, type=field.type)
-                    )
-                elif self._colmap.get(field.name, field.name) in raw.column_names:
-                    cols.append(
-                        raw.column(self._colmap.get(field.name, field.name))
-                        .combine_chunks()
-                        .cast(field.type)
-                    )
-                else:
-                    cols.append(pa.nulls(raw.num_rows, field.type))
-            yield from pa.table(cols, schema=target).to_batches()
-            return
-        path, appl = partition.value
-        raw = pq.read_table(path)
-        cols = []
-        for field in target:
-            src = self._colmap.get(field.name, field.name)
-            if src in raw.column_names:
-                cols.append(
-                    raw.column(src).combine_chunks().cast(field.type)
-                )
+        for unit in partition.value:
+            if self._change_feed:
+                _tag, path, ctype, cver, cts = unit
+                raw = pq.read_table(path)
+                change = (ctype, cver, cts)
+                yield from aligned(raw, target, self._colmap, change).to_batches()
             else:
-                cols.append(pa.nulls(raw.num_rows, field.type))
-        tbl = pa.table(cols, schema=target)
+                yield from self._read_live(unit, target)
+
+    def _read_live(self, unit: tuple, target) -> Iterator:
+        """One data file with its applicable merge-on-read deletes
+        anti-joined out as Arrow compute — the engine receives only
+        live rows."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        path, appl = unit
+        tbl = aligned(pq.read_table(path), target, self._colmap)
         # delete-key files record PHYSICAL key names; the joined data
         # table carries LOGICAL names — translate physical -> logical
         inv = {p: l for l, p in self._colmap.items()}
@@ -770,7 +773,10 @@ class SnapshotBatchDataSource(DataSource):
     def name(cls) -> str:
         return "snapshot"
 
-    def schema(self) -> str:
+    #: Spark's file-split inputs; ``register`` binds the session's
+    split_conf = SplitConf()
+
+    def schema(self) -> StructType:
         opts = {k.lower(): v for k, v in self.options.items()}
         t = SnapshotTable(opts["path"])
         version = _resolve_version(t, opts)
@@ -785,16 +791,9 @@ class SnapshotBatchDataSource(DataSource):
                 "snapshot batch source: the resolved manifest records no "
                 "schema (pre-round-10 table)"
             )
-        ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in st.fields
+        return source_schema(
+            st, str(opts.get("readchangefeed", "false")).lower() == "true"
         )
-        if str(opts.get("readchangefeed", "false")).lower() == "true":
-            ddl += (
-                ", _change_type string"
-                ", _commit_version bigint"
-                ", _commit_timestamp double"
-            )
-        return ddl
 
     def reader(self, schema: StructType) -> SnapshotBatchReader:
         opts = dict(self.options)
@@ -804,7 +803,7 @@ class SnapshotBatchDataSource(DataSource):
             # versionAsOf wins every other resolution rule, so this
             # also freezes branch/tag/timestamp reads at analysis time
             opts["versionAsOf"] = str(v)
-        return SnapshotBatchReader(opts, schema)
+        return SnapshotBatchReader(opts, schema, self.split_conf)
 
     def writer(self, schema: StructType, overwrite: bool) -> SnapshotBatchWriter:
         return SnapshotBatchWriter(dict(self.options), schema, overwrite)
@@ -820,9 +819,10 @@ def register(spark) -> None:
     replaces silently, but a session CLONE inherits its parent's
     registration and re-registering there raises
     DATA_SOURCE_ALREADY_EXISTS — swallow exactly that (the registered
-    class is always this one, so already-exists is success)."""
+    class is always this one, so already-exists is success). Binds the
+    registering session's split inputs (``splits.bind_session``)."""
     try:
-        spark.dataSource.register(SnapshotBatchDataSource)
+        spark.dataSource.register(bind_session(SnapshotBatchDataSource, spark))
     except Exception as ex:  # pyspark AnalysisException
         if "DATA_SOURCE_ALREADY_EXISTS" not in str(ex):
             raise

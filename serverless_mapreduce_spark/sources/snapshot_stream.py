@@ -73,12 +73,14 @@ Semantics (Delta's, deliberately):
   written before an add-column surface the new column as NULL (the same
   ``_reader`` contract batch reads use).
 
-Scale: ``latestOffset``/``partitions`` read manifests only (one JSON +
-the delta's segments — segment summaries keep that O(delta)); each data
-file is one :class:`InputPartition`, so the scan parallelizes per file
-across executors; ``read`` yields Arrow ``RecordBatch``es straight from
-the parquet footer reader — no per-row Python (the pyds_kv.py
-discipline).
+Scale: ``latestOffset``/``file_plan`` read manifests only (one JSON +
+the delta's segments — segment summaries keep that O(delta)), sizing
+each file from its recorded ``bytes``; ``partitions`` packs that per-file
+plan into Spark-sized splits (``splits.pack``: Spark's file-split rule
+over contiguous runs of plan order), so a micro-batch runs about one
+task wave, not one ~60 ms Python task per file; ``read`` yields Arrow
+``RecordBatch``es straight from the parquet reader for each file of its
+split — no per-row Python (the pyds_kv.py discipline).
 
 Reference analog: none — the reference's pipelines re-read whole input
 prefixes per job (``driver/driver.py`` re-lists S3 every run); this is
@@ -96,12 +98,28 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from serverless_mapreduce_spark.catalog import table
 from serverless_mapreduce_spark.paths import scratch, sf_tag
 from serverless_mapreduce_spark.registry import query
 from serverless_mapreduce_spark.sources.snapshots import SnapshotTable, _cents
+from serverless_mapreduce_spark.sources.splits import (
+    PlannedFile,
+    SplitConf,
+    bind_session,
+    pack,
+    planned,
+)
 
 #: commit modes that stream ZERO new rows by construction regardless of
 #: flags: rewrite-manifests / restore reference only already-known files
@@ -117,16 +135,71 @@ _ZERO_ROW_MODES = {"rewrite-manifests", "restore"}
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
 COMMIT_TS_COL = "_commit_timestamp"
+CHANGE_FIELDS = (
+    StructField(CHANGE_TYPE_COL, StringType()),
+    StructField(COMMIT_VERSION_COL, LongType()),
+    StructField(COMMIT_TS_COL, DoubleType()),
+)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType)) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
+
+
+def source_schema(manifest_schema: StructType, change_feed: bool) -> StructType:
+    """The schema a snapshot source declares: the manifest's, all
+    nullable (files written before an add-column read it as NULL), plus
+    the change-feed columns under ``readChangeFeed``. A StructType, not
+    DDL, so no column name goes through a parse."""
+    fields = _nullable(manifest_schema).fields
+    return StructType(fields + list(CHANGE_FIELDS) if change_feed else fields)
+
+
+def aligned(raw, target, colmap: dict, change: tuple | None = None):
+    """``raw`` (an Arrow table read from one file) aligned to the pinned
+    Arrow schema ``target``: present columns cast to their declared
+    types through the logical -> physical ``colmap``, absent ones
+    (pre-evolution files; the non-key columns of a delete-key file)
+    filled with NULLs. ``change`` = (change type, commit version, commit
+    timestamp) fills the change-feed columns with those constants."""
+    import pyarrow as pa
+
+    consts = dict(zip((f.name for f in CHANGE_FIELDS), change or ()))
+    n = raw.num_rows
+    cols = []
+    for field in target:
+        src = colmap.get(field.name, field.name)
+        if field.name in consts:
+            cols.append(pa.array([consts[field.name]] * n, type=field.type))
+        elif src in raw.column_names:
+            cols.append(raw.column(src).combine_chunks().cast(field.type))
+        else:
+            cols.append(pa.nulls(n, field.type))
+    return pa.table(cols, schema=target)
 
 
 class SnapshotStreamReader(DataSourceStreamReader):
     """Version-offset stream reader over a snapshot table directory.
 
     Pickled to executors for ``read`` — holds only the table path,
-    options, and the pinned schema (never a live SnapshotTable: its
-    caches are driver-side planning state)."""
+    options, the pinned schema and the split inputs (never a live
+    SnapshotTable: its caches are driver-side planning state)."""
 
-    def __init__(self, options: dict, schema: StructType):
+    def __init__(
+        self,
+        options: dict,
+        schema: StructType,
+        split_conf: SplitConf = SplitConf(),
+    ):
         opts = {k.lower(): v for k, v in options.items()}
         self._base = opts["path"]
         self._start = int(opts.get("startingversion", 0))
@@ -236,6 +309,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         self._catalog_table = opts.get("catalogtablename")
         self._catalog_stream = opts.get("catalogstreamid")
         self._schema = schema
+        self._split_conf = split_conf
 
     def _table(self) -> SnapshotTable:
         # one instance per reader so the immutable-segment cache amortizes
@@ -358,8 +432,16 @@ class SnapshotStreamReader(DataSourceStreamReader):
     # -- planning ---------------------------------------------------------
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        """One partition per delta file in (start, end] — planned from
-        manifests alone via a PER-VERSION ref diff (``_delta_entries``:
+        """The (start, end] file plan packed into Spark-sized splits
+        (``splits.pack``). Packing is a deterministic function of the
+        plan, so a replayed batch re-plans to the same partitions."""
+        return pack(self.file_plan(start, end), self._split_conf)
+
+    def file_plan(self, start: dict, end: dict) -> list[PlannedFile]:
+        """One (path, change_type, commit_version, commit_ts) unit per
+        delta file in (start, end], in version then file order, sized
+        from the manifest's ``bytes`` — planned from manifests alone via
+        a PER-VERSION ref diff (``_delta_entries``:
         each append's new segments hold exactly its new files, O(delta)
         cost). The walk is what makes maintenance safe: a
         ``data_change=false`` compaction between two appends contributes
@@ -381,7 +463,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         # at-least-once window for subscribers of staged tables.
         bodies, superseded = t._walk_bodies(lo, hi)
         tombs = t._tombstones()
-        out: list[InputPartition] = []
+        out: list[PlannedFile] = []
         for v in range(lo + 1, hi + 1):
             body = bodies.get(v)
             if body is None:
@@ -450,68 +532,44 @@ class SnapshotStreamReader(DataSourceStreamReader):
             for e in t._delta_entries(v, allow_holes=not self._fail_on_loss):
                 kind = e.get("kind")
                 if kind == "delete" and emit_deletes:
-                    out.append(InputPartition((e["path"], "delete", v, ts)))
+                    ctype = "delete"
                 elif kind == "change" and emit_changes:
-                    out.append(
-                        InputPartition(
-                            (e["path"], e.get("change", "delete"), v, ts)
-                        )
-                    )
+                    ctype = e.get("change", "delete")
                 elif kind is None and emit_data:
-                    out.append(InputPartition((e["path"], "insert", v, ts)))
+                    ctype = "insert"
+                else:
+                    continue
+                out.append(
+                    planned((e["path"], ctype, v, ts), e["path"], e.get("bytes"))
+                )
             if emit_changes:
                 # replace_where(change_feed=True): whole-file pre-images
                 # referenced by path (the dropped files — zero write
                 # amplification for the delete half) and the version's
-                # new data files as the insert half
+                # new data files as the insert half; the body records
+                # paths only, so these are sized by a stat
                 for p in body.get("cdf_pre", []):
-                    out.append(InputPartition((p, "delete", v, ts)))
+                    out.append(planned((p, "delete", v, ts), p))
                 for p in body.get("cdf_ins", []):
-                    out.append(InputPartition((p, "insert", v, ts)))
+                    out.append(planned((p, "insert", v, ts), p))
         return out
 
     # -- execution --------------------------------------------------------
 
     def read(self, partition: InputPartition) -> Iterator:
-        """Arrow-batch read of one delta file, aligned to the pinned
-        schema: present columns cast to their declared Arrow types,
-        absent ones (pre-evolution files — and, under the change feed,
-        the non-key columns of a delete-key file) filled with NULLs —
-        the streaming twin of the batch ``_reader`` schema pin. Under
-        ``readChangeFeed`` the planner tagged each partition insert or
-        delete; the tag materializes as the constant ``_change_type``
-        column."""
-        import pyarrow as pa
+        """Arrow-batch read of each delta file of one split, in plan
+        order, aligned to the pinned schema (:func:`aligned` — the
+        streaming twin of the batch ``_reader`` schema pin). Under
+        ``readChangeFeed`` the planner tagged each file with its change
+        type and commit; the tags materialize as constant columns."""
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        val = partition.value
-        if isinstance(val, str):
-            path, ctype, cver, cts = val, "insert", None, None
-        elif len(val) == 2:
-            path, ctype = val
-            cver = cts = None
-        else:
-            path, ctype, cver, cts = val
         target = to_arrow_schema(self._schema)
-        raw = pq.read_table(path)
-        cols = []
-        for field in target:
-            if self._change_feed and field.name == CHANGE_TYPE_COL:
-                cols.append(pa.array([ctype] * raw.num_rows, type=field.type))
-            elif self._change_feed and field.name == COMMIT_VERSION_COL:
-                cols.append(pa.array([cver] * raw.num_rows, type=field.type))
-            elif self._change_feed and field.name == COMMIT_TS_COL:
-                cols.append(pa.array([cts] * raw.num_rows, type=field.type))
-            elif self._colmap.get(field.name, field.name) in raw.column_names:
-                cols.append(
-                    raw.column(self._colmap.get(field.name, field.name))
-                    .combine_chunks()
-                    .cast(field.type)
-                )
-            else:
-                cols.append(pa.nulls(raw.num_rows, field.type))
-        yield from pa.table(cols, schema=target).to_batches()
+        for path, ctype, cver, cts in partition.value:
+            change = (ctype, cver, cts) if self._change_feed else None
+            raw = pq.read_table(path)
+            yield from aligned(raw, target, self._colmap, change).to_batches()
 
 
 class SnapshotStreamDataSource(DataSource):
@@ -551,10 +609,13 @@ class SnapshotStreamDataSource(DataSource):
     def name(cls) -> str:
         return "snapshotstream"
 
-    def schema(self) -> str:
-        # executed in an isolated Python worker: derive the DDL from the
-        # table head's manifest schema directly (StructType is pure
-        # Python; no SparkSession exists here)
+    #: Spark's file-split inputs; ``register`` binds the session's
+    split_conf = SplitConf()
+
+    def schema(self) -> StructType:
+        # executed in an isolated Python worker: derived from the table
+        # head's manifest schema directly (StructType is pure Python; no
+        # SparkSession exists here)
         opts = {k.lower(): v for k, v in self.options.items()}
         t = SnapshotTable(opts["path"])
         head = t.latest_version()
@@ -568,24 +629,18 @@ class SnapshotStreamDataSource(DataSource):
             raise ValueError(
                 "snapshot stream source: head manifest records no schema"
             )
-        ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in st.fields
+        return source_schema(
+            st, str(opts.get("readchangefeed", "false")).lower() == "true"
         )
-        if str(opts.get("readchangefeed", "false")).lower() == "true":
-            ddl += (
-                f", {CHANGE_TYPE_COL} string"
-                f", {COMMIT_VERSION_COL} bigint"
-                f", {COMMIT_TS_COL} double"
-            )
-        return ddl
 
     def streamReader(self, schema: StructType) -> SnapshotStreamReader:
-        return SnapshotStreamReader(dict(self.options), schema)
+        return SnapshotStreamReader(dict(self.options), schema, self.split_conf)
 
 
 def register(spark: SparkSession) -> None:
-    """Idempotent per-session registration."""
-    spark.dataSource.register(SnapshotStreamDataSource)
+    """Idempotent per-session registration, binding the session's split
+    inputs (``splits.bind_session``)."""
+    spark.dataSource.register(bind_session(SnapshotStreamDataSource, spark))
 
 
 def read_stream(spark: SparkSession, base: str, **options: str) -> DataFrame:

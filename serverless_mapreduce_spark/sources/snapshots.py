@@ -5619,11 +5619,11 @@ class SnapshotTable:
         table."""
         groups = self.plan_changes(from_version, to_version)
         parts = []
-        for paths, ctype, v, ts in groups:
+        for files, ctype, v, ts in groups:
             parts.append(
                 # logical names pinned to to_version: a CDF window
                 # spanning a rename serves the POST-rename schema
-                self._open_files(spark, to_version, list(paths))
+                self._open_files(spark, to_version, [p for p, _ in files])
                 .withColumn("_change_type", F.lit(ctype))
                 .withColumn(
                     "_commit_version", F.lit(v).cast("bigint")
@@ -5663,15 +5663,17 @@ class SnapshotTable:
 
     def plan_changes(
         self, from_version: int, to_version: int
-    ) -> list[tuple[list[str], str, int, float | None]]:
+    ) -> list[tuple[list[tuple[str, int | None]], str, int, float | None]]:
         """The change feed's FILE PLAN for ``(from_version, to_version]``:
-        (paths, change_type, commit_version, commit_ts) groups, derived
+        (files, change_type, commit_version, commit_ts) groups, each file
+        a (path, recorded bytes) pair — bytes None for the paths a commit
+        body lists without sizes (``cdf_pre``/``cdf_ins``) — derived
         from manifests alone — shared by :meth:`read_changes` and the
         batch ``spark.read.format("snapshot")`` change-feed option. Same
         loud-hole and supersede semantics as :meth:`read_changes`."""
         bodies, superseded = self._walk_bodies(from_version, to_version)
         tombs = self._tombstones()
-        groups: list[tuple[list[str], str, int, float | None]] = []
+        groups: list[tuple[list[tuple[str, int | None]], str, int, float | None]] = []
         for v in range(from_version + 1, to_version + 1):
             body = bodies.get(v)
             if body is None:
@@ -5689,11 +5691,13 @@ class SnapshotTable:
                 continue
             mode = body.get("mode", "append")
             ts = body.get("ts")
-            by_type: dict[str, list[str]] = {}
+            by_type: dict[str, list[tuple[str, int | None]]] = {}
             if mode == "append":
                 for e in self._delta_entries(v):
                     if "kind" not in e:
-                        by_type.setdefault("insert", []).append(e["path"])
+                        by_type.setdefault("insert", []).append(
+                            (e["path"], e.get("bytes"))
+                        )
             elif mode == "delete-mor" and not body.get("cdf"):
                 # the deleted KEYS are the best available pre-image
                 # (non-key columns NULL); delete_where_mor with
@@ -5702,7 +5706,9 @@ class SnapshotTable:
                 # double-count every deleted row
                 for e in self._delta_entries(v):
                     if e.get("kind") == "delete":
-                        by_type.setdefault("delete", []).append(e["path"])
+                        by_type.setdefault("delete", []).append(
+                            (e["path"], e.get("bytes"))
+                        )
             elif mode in ("rewrite-manifests", "restore"):
                 continue
             elif body.get("cdf"):
@@ -5710,20 +5716,22 @@ class SnapshotTable:
                     if e.get("kind") == "change":
                         by_type.setdefault(
                             e.get("change", "delete"), []
-                        ).append(e["path"])
+                        ).append((e["path"], e.get("bytes")))
                 for p in body.get("cdf_pre", []):
-                    by_type.setdefault("delete", []).append(p)
+                    by_type.setdefault("delete", []).append((p, None))
                 ins = body.get("cdf_ins")
                 if ins:
-                    by_type.setdefault("insert", []).extend(ins)
+                    by_type.setdefault("insert", []).extend(
+                        (p, None) for p in ins
+                    )
             else:
                 raise ValueError(
                     f"version {v} has mode {mode!r} without recorded "
                     "change files; its row-level delta is not derivable "
                     "(commit with change_feed=True to log it)"
                 )
-            for ctype, paths in sorted(by_type.items()):
-                groups.append((paths, ctype, v, ts))
+            for ctype, files in sorted(by_type.items()):
+                groups.append((files, ctype, v, ts))
         return groups
 
     def versions_metadata(self, spark: SparkSession) -> DataFrame:

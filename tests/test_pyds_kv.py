@@ -1,4 +1,4 @@
-"""typedkv Python DataSource: pushdown contract, partition fanout, decode."""
+"""typedkv Python DataSource: pushdown contract, split packing, decode."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ from serverless_mapreduce_spark.sources.pyds_kv import (
     TypedKVReader,
     register,
 )
+from serverless_mapreduce_spark.sources.splits import SplitConf
 
 SPEC = "id:N:bigint,name:S:string,score:N:double"
 
@@ -64,17 +65,24 @@ def test_reader_applies_pushed_filters_and_decodes_nulls(tmp_path):
     assert rows == [(1, "x", 1.5), (3, "x", None)]
 
 
-def test_partition_per_file(tmp_path):
+def test_files_packed_into_splits(tmp_path):
+    """One plan unit per wire file (markers ignored), packed by Spark's
+    split rule: six tiny files under minPartitionNum=2 fill two splits
+    that hold every file once, in name order, and read back every row."""
     d = str(tmp_path)
-    for i in range(3):
+    for i in range(6):
         with open(os.path.join(d, f"part-{i}.jsonl"), "w") as fh:
             fh.write(json.dumps({"id": {"N": str(i)}, "name": {"S": "a"},
                                  "score": {"N": "0.0"}}) + "\n")
     with open(os.path.join(d, "_SUCCESS"), "w") as fh:     # marker ignored
         fh.write("")
-    r = TypedKVReader({"path": d, "columns": SPEC})
+    r = TypedKVReader({"path": d, "columns": SPEC}, SplitConf(min_partitions=2))
+    plan = [u.value for u in r.file_plan()]
+    assert plan == [os.path.join(d, f"part-{i}.jsonl") for i in range(6)]
     parts = r.partitions()
-    assert len(parts) == 3 and all(isinstance(p, InputPartition) for p in parts)
+    assert len(parts) == 2 and all(isinstance(p, InputPartition) for p in parts)
+    assert [f for p in parts for f in p.value] == plan
+    assert [row[0] for row in _rows(r)] == list(range(6))
 
 
 def test_end_to_end_scan_with_spark(spark, tmp_path):

@@ -842,7 +842,7 @@ def test_max_bytes_per_trigger_bounds_batches(spark, tmp_path):
     ends = []
     for _ in range(3):
         end = reader.latestOffset()
-        reader.partitions(off, end)
+        reader.file_plan(off, end)
         reader.commit(end)
         ends.append(end["version"])
         off = end
@@ -916,7 +916,7 @@ def test_capped_stream_skips_superseded_stage_across_windows(spark, tmp_path):
     paths: list = []
     for _ in range(3):
         end = reader.latestOffset()
-        paths += [p.value[0] for p in reader.partitions(off, end)]
+        paths += [p.value[0] for p in reader.file_plan(off, end)]
         reader.commit(end)
         off = end
     got = sorted(r.k for r in spark.read.parquet(*paths).collect())
@@ -953,7 +953,7 @@ def test_max_bytes_walk_tolerates_orphan_hole(spark, tmp_path):
     paths: list = []
     for _ in range(3):
         end = reader.latestOffset()
-        paths += [p.value[0] for p in reader.partitions(off, end)]
+        paths += [p.value[0] for p in reader.file_plan(off, end)]
         reader.commit(end)
         off = end
     got = sorted(r.k for r in spark.read.parquet(*paths).collect())

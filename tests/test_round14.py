@@ -164,11 +164,11 @@ def test_stream_raises_on_unexplained_hole(spark, tmp_path):
     os.remove(t._manifest_path(2))  # simulate retention outrunning us
     reader = SnapshotStreamReader({"path": base}, None)
     with pytest.raises(ValueError, match="failOnDataLoss"):
-        reader.partitions({"version": 0}, {"version": 3})
+        reader.file_plan({"version": 0}, {"version": 3})
     lax = SnapshotStreamReader(
         {"path": base, "failOnDataLoss": "false"}, None
     )
-    parts = lax.partitions({"version": 0}, {"version": 3})
+    parts = lax.file_plan({"version": 0}, {"version": 3})
     # the hole itself is skipped, but v3's delta diffs against the
     # nearest LIVE ancestor (v1) — the hole's still-referenced segment
     # rides along, so for append histories lax mode RECOVERS the rows
@@ -196,7 +196,7 @@ def test_stream_skips_tombstoned_orphan_hole(spark, tmp_path):
     assert collected == {"tbl": [2]}
     assert t._tombstones() == {2}
     reader = SnapshotStreamReader({"path": t.base}, None)
-    parts = reader.partitions({"version": 0}, {"version": 3})
+    parts = reader.file_plan({"version": 0}, {"version": 3})
     # v1 + v3 stream exactly once; the tombstoned hole contributes nothing
     rows = sorted(
         tuple(r)
@@ -230,7 +230,7 @@ def test_staging_token_scopes_supersede(spark, tmp_path):
     va = t.commit_onto(vb, _kv(spark, [(1, 10)]), token="s:0")     # v4
     cat.publish({"tbl": va}, "s", 0)
     reader = SnapshotStreamReader({"path": t.base}, None)
-    parts = reader.partitions({"version": 0}, {"version": va})
+    parts = reader.file_plan({"version": 0}, {"version": va})
     files = [p.value[0] for p in parts]
     rows = sorted(
         tuple(r)

@@ -71,9 +71,9 @@ def test_stream_boundary_hole_honors_fail_on_data_loss(spark, tmp_path):
     os.remove(t._manifest_path(2))  # retention outran the cursor
     reader = SnapshotStreamReader({"path": base}, None)
     with pytest.raises(ValueError, match="not tombstoned"):
-        reader.partitions({"version": 2}, {"version": 3})
+        reader.file_plan({"version": 2}, {"version": 3})
     lax = SnapshotStreamReader({"path": base, "failOnDataLoss": "false"}, None)
-    parts = lax.partitions({"version": 2}, {"version": 3})
+    parts = lax.file_plan({"version": 2}, {"version": 3})
     rows = sorted(
         tuple(r)
         for p in parts
@@ -219,7 +219,7 @@ def test_batch_ds_schema_and_plan_pin_same_version(spark, tmp_path):
     t.commit(_kv(spark, [(2, 2)]))  # a commit lands before reader()
     reader = ds.reader(t._schema(1))
     assert reader._version == 1  # plan comes from the pinned snapshot
-    planned = {p.value[0] for p in reader.partitions()}
+    planned = {p.value[0] for p in reader.file_plan()}
     assert planned == set(t._files(1))
 
 
@@ -498,7 +498,7 @@ def test_fast_forward_publishes_branch_series_atomically(spark, tmp_path):
     )
 
     reader = SnapshotStreamReader({"path": t.base}, None)
-    parts = reader.partitions({"version": 0}, {"version": ff})
+    parts = reader.file_plan({"version": 0}, {"version": ff})
     rows = sorted(
         r.k
         for p in parts
@@ -1003,7 +1003,7 @@ def test_stream_starting_timestamp(spark, tmp_path):
         {"path": base, "startingTimestamp": str(cut)}, None
     )
     assert reader.initialOffset() == {"version": 1}
-    parts = reader.partitions({"version": 1}, {"version": 2})
+    parts = reader.file_plan({"version": 1}, {"version": 2})
     rows = sorted(
         r.k for p in parts for r in spark.read.parquet(p.value[0]).collect()
     )
@@ -1114,7 +1114,7 @@ def test_pushed_in_filter_prunes_partitions_and_stats(spark, tmp_path):
     reader = SnapshotBatchReader({"path": base}, t._schema(1))
     residual = list(reader.pushFilters([In(("p",), ("a", "c"))]))
     assert len(residual) == 1  # returned for row-level re-eval
-    planned = [p.value[0] for p in reader.partitions()]
+    planned = [p.value[0] for p in reader.file_plan()]
     assert len(planned) == 2  # only the a and c partitions
     rows = sorted(
         r.v
@@ -1131,7 +1131,7 @@ def test_pushed_in_filter_prunes_partitions_and_stats(spark, tmp_path):
         )
     r2 = SnapshotBatchReader({"path": str(tmp_path / "tbl2")}, t2._schema(3))
     list(r2.pushFilters([In(("k",), (5, 7))]))
-    planned2 = [p.value[0] for p in r2.partitions()]
+    planned2 = [p.value[0] for p in r2.file_plan()]
     assert len(planned2) == 1  # only the 0..9 file can hold 5 or 7
 
 
@@ -1156,7 +1156,7 @@ def test_pushed_startswith_and_null_filters_prune(spark, tmp_path):
     list(r.pushFilters([StringStartsWith(("p",), "al")]))
     vals = sorted(
         row.v
-        for part in r.partitions()
+        for part in r.file_plan()
         for row in spark.read.parquet(part.value[0]).collect()
     )
     assert vals == [1, 4]
@@ -1165,7 +1165,7 @@ def test_pushed_startswith_and_null_filters_prune(spark, tmp_path):
     list(r2.pushFilters([IsNotNull(("p",))]))
     vals2 = sorted(
         row.v
-        for part in r2.partitions()
+        for part in r2.file_plan()
         for row in spark.read.parquet(part.value[0]).collect()
     )
     assert vals2 == [1, 2, 4]
@@ -1173,7 +1173,7 @@ def test_pushed_startswith_and_null_filters_prune(spark, tmp_path):
     list(r3.pushFilters([IsNull(("p",))]))
     vals3 = sorted(
         row.v
-        for part in r3.partitions()
+        for part in r3.file_plan()
         for row in spark.read.parquet(part.value[0]).collect()
     )
     assert vals3 == [3]
@@ -1188,7 +1188,7 @@ def test_pushed_startswith_and_null_filters_prune(spark, tmp_path):
     )
     r4 = SnapshotBatchReader({"path": t2.base}, t2._schema(1))
     list(r4.pushFilters([StringStartsWith(("s",), "a")]))
-    planned = [p.value[0] for p in r4.partitions()]
+    planned = [p.value[0] for p in r4.file_plan()]
     assert len(planned) == 1
     vals4 = sorted(
         row.v for f in planned for row in spark.read.parquet(f).collect()
@@ -1214,12 +1214,12 @@ def test_pushed_equality_probes_bloom_bitmaps(spark, tmp_path):
         )
     r = SnapshotBatchReader({"path": base}, t._schema(3))
     list(r.pushFilters([EqualTo(("k",), 42)]))   # 42 % 3 == 0: file 1
-    planned = [p.value[0] for p in r.partitions()]
+    planned = [p.value[0] for p in r.file_plan()]
     assert len(planned) == 1
     assert [row.k for row in spark.read.parquet(planned[0]).filter("k = 42").collect()] == [42]
     r2 = SnapshotBatchReader({"path": base}, t._schema(3))
     list(r2.pushFilters([In(("k",), (42, 43))]))  # files 1 and 2
-    assert len(r2.partitions()) == 2
+    assert len(r2.file_plan()) == 2
 
 
 def test_fast_forward_rebase_appends(spark, tmp_path):

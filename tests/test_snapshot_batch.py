@@ -38,7 +38,7 @@ def test_pushed_partition_filter_matches_plan_files(spark, tmp_path):
     reader = SnapshotBatchReader({"path": base}, t._schema(1))
     residual = list(reader.pushFilters([EqualTo(("p",), "b")]))
     assert len(residual) == 1  # every filter is returned for row-level eval
-    planned = [p.value[0] for p in reader.partitions()]
+    planned = [p.value[0] for p in reader.file_plan()]
     lib, _total = t.plan_files(1, partition_eq={"p": "b"})
     assert sorted(planned) == sorted(lib)
     assert len(planned) < 4  # really pruned
@@ -60,7 +60,7 @@ def test_pushed_range_filter_matches_plan_files(spark, tmp_path):
         )
     )
     assert len(residual) == 2
-    planned = [p.value[0] for p in reader.partitions()]
+    planned = [p.value[0] for p in reader.file_plan()]
     lib, _total = t.plan_files(head, where=("k", 100, 150))
     assert sorted(planned) == sorted(lib)
     assert len(planned) == 1  # only the middle commit's file

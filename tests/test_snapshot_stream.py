@@ -180,7 +180,7 @@ def test_partitions_plan_is_o_delta_on_append_history(
 
     monkeypatch.setattr(snapmod.SnapshotTable, "_seg_entries", spy)
     reader = SnapshotStreamReader({"path": base}, t._schema(7))
-    parts = reader.partitions({"version": 6}, {"version": 7})
+    parts = reader.file_plan({"version": 6}, {"version": 7})
     # partition payload is (path, change_type) since the r13 change feed
     assert {p.value[0] for p in parts} == want and want
     # only the ONE new segment was opened to plan the delta
@@ -214,7 +214,7 @@ def test_max_versions_per_trigger_bounds_backfill_batches(spark, tmp_path):
         if end == cur:
             break
         assert end["version"] - cur["version"] <= 2
-        parts = reader.partitions(cur, end)
+        parts = reader.file_plan(cur, end)
         assert len(parts) <= 2 * len(t._files(1))
         reader.commit(end)
         seen.append(end["version"])
@@ -225,3 +225,49 @@ def test_max_versions_per_trigger_bounds_backfill_batches(spark, tmp_path):
     r2 = SnapshotStreamReader({"path": base}, t._schema(5))
     r2.initialOffset()
     assert r2.latestOffset() == {"version": 5}
+
+
+def test_sources_read_columns_that_need_quoting(spark, tmp_path):
+    """Column names that are not bare identifiers (a space, a dot) reach
+    both snapshot sources intact: the declared schema is a StructType, so
+    no name goes through a DDL parse. A batch read, a change-feed batch
+    read and an availableNow drain all return the committed rows."""
+    from serverless_mapreduce_spark.sources.snapshot_batch import register
+
+    base = str(tmp_path / "tbl")
+    t = SnapshotTable(base)
+    t.commit(
+        spark.range(0, 4).select(
+            F.col("id").alias("order id"), (F.col("id") * 10).alias("v.w")
+        )
+    )
+    want = [(k, k * 10) for k in range(4)]
+    # the batch reader implements pushFilters, which Spark refuses to
+    # call unless this is on (the test_snapshot_batch.py setup)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    register(spark)
+    batch = spark.read.format("snapshot").option("path", base).load()
+    assert batch.columns == ["order id", "v.w"]
+    assert sorted(tuple(r) for r in batch.collect()) == want
+    feed = (
+        spark.read.format("snapshot")
+        .option("path", base)
+        .option("readChangeFeed", "true")
+        .load()
+    )
+    assert sorted(tuple(r)[:2] for r in feed.collect()) == want
+    rows: list = []
+
+    def sink(batch_df, batch_id):
+        rows.extend(tuple(r) for r in batch_df.collect())
+
+    sdf = read_stream(spark, base)
+    assert sdf.columns == ["order id", "v.w"]
+    (
+        sdf.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    assert sorted(rows) == want
