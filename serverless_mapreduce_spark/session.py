@@ -68,9 +68,18 @@ def get_spark(
         # production practice as sizing executor -Xms on a real cluster;
         # applied uniformly at every core count so c8/c32 benches stay
         # comparable.
+        # A fixed young generation (NewRatio=2: one third of the heap)
+        # makes how much of that pre-sized heap a run touches a function
+        # of the work, not of GC timing: G1's adaptive young sizing grew
+        # eden to anywhere between ~30 % and ~57 % of the heap depending
+        # on when a metadata-threshold GC happened to fire, so the same
+        # 2g perfbench table_lifecycle run peaked at 1.9-2.5 GB RSS from
+        # one run to the next; with the fixed young gen it peaks within
+        # ~35 MB (1.84-1.87 GB over 10 runs), at the same ~0.3 s of total
+        # GC pause per run.
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '8g')}",
+            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '8g')} -XX:NewRatio=2",
         )
         # see the os.environ block above — carries the same one-BLAS-
         # thread-per-worker sizing to non-local executors

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1041,6 +1042,9 @@ class SnapshotTable:
                         ent["change"] = tag
                     entries.append(ent)
             entries.sort(key=lambda e: e["path"])
+            if not entries:  # no row: no manifest will name the directory
+                shutil.rmtree(out_dir, ignore_errors=True)
+                return entries
             import pyarrow.parquet as _pq
 
             if len(entries) <= self.ROWS_FOOTER_CAP:
@@ -1113,6 +1117,9 @@ class SnapshotTable:
         entries: list[dict] = [
             {"path": f, "bytes": os.path.getsize(f)} for f in new_files
         ]
+        if not entries:  # no row: no manifest will name the directory
+            shutil.rmtree(out_dir, ignore_errors=True)
+            return entries
         if partition_by:
             from urllib.parse import unquote
 
@@ -1266,40 +1273,6 @@ class SnapshotTable:
                     "bits": sorted(r["bits"]) if r is not None else [],
                 }
         return entries
-
-    def _write_change_set(
-        self, frames: list[tuple[DataFrame, str | None]], schema
-    ) -> list[dict]:
-        """Write ALL of one commit's CDF change frames in a single
-        tagged Spark job (see ``_write_data``'s ``change_tag_col``):
-        each frame is aligned to the evolved ``schema`` (absent columns
-        NULL — the stable shape the feed serves) and tagged with its
-        change kind; a ``None`` kind means the frame already carries its
-        own per-row ``_chg`` column (e.g. the postimage/insert split
-        computed by one left join instead of a semi + anti pair).
-        Replaces one ``_write_data`` job per change kind."""
-        tagged = []
-        for frame, kind in frames:
-            aligned = frame
-            for f in schema.fields:
-                if f.name not in frame.columns:
-                    aligned = aligned.withColumn(
-                        f.name, F.lit(None).cast(f.dataType)
-                    )
-            cols = [f.name for f in schema.fields]
-            if kind is None:
-                aligned = aligned.select(*cols, "_chg")
-            else:
-                aligned = aligned.select(*cols).withColumn(
-                    "_chg", F.lit(kind)
-                )
-            tagged.append(aligned)
-        if not tagged:
-            return []
-        df = tagged[0]
-        for t in tagged[1:]:
-            df = df.unionByName(t)
-        return self._write_data(df, (), change_tag_col="_chg")
 
     #: Per-commit byte ceiling for the driver-side stats lift below: at
     #: most this much just-written parquet is re-read on the driver
@@ -1984,6 +1957,10 @@ class SnapshotTable:
 
     # -- row-level changes (copy-on-write) --------------------------------
 
+    #: the tag that marks a rewrite's DATA rows in its one tagged write;
+    #: every other tag is a change-feed kind
+    _DATA_TAG = "__data__"
+
     @staticmethod
     def _partition_eq_split(
         entries: list[dict], partition_eq: dict
@@ -2005,6 +1982,346 @@ class SnapshotTable:
             )
             (kept if untouched else cand).append(e)
         return cand, kept
+
+    def _dml_scope(
+        self,
+        version: int,
+        prune: tuple[str, float, float] | None,
+        partition_eq: dict | None,
+    ) -> tuple[list[dict], list[dict], list[dict] | None]:
+        """The planning scope of a predicate DML: ``version``'s data
+        entries split into (candidates, provably untouched), plus the
+        read-set regions the scope declares (``None`` = the whole
+        table, so any concurrent addition conflicts). ``partition_eq``
+        files RECORDING a different value and ``prune`` files whose
+        recorded [min, max] cannot meet the box are untouched by proof;
+        files without the record stay candidates. Manifest stats and
+        partition keys are PHYSICAL under column mapping, so both are
+        translated here; conditions stay logical (they run on the
+        logically-named read). Caller contract: the condition must not
+        match rows outside the declared scope."""
+        cmap = self.column_mapping(version)
+        cand, kept = self._data_entries(version), []
+        regions: list[dict] = []
+        if partition_eq is not None:
+            want = {
+                self._translate_spec(k, cmap): v
+                for k, v in partition_eq.items()
+            }
+            cand, kept = self._partition_eq_split(cand, want)
+            regions.append(
+                {
+                    "partition_in": {
+                        c: {hive_partition_value(v)} for c, v in want.items()
+                    }
+                }
+            )
+        if prune is not None:
+            col, lo, hi = cmap.get(prune[0], prune[0]), prune[1], prune[2]
+            regions.append({"where": (col, lo, hi)})
+            inside = [
+                self._stats_box_overlaps(e.get("stats", {}).get(col), lo, hi)
+                for e in cand
+            ]
+            kept += [e for e, hit in zip(cand, inside) if not hit]
+            cand = [e for e, hit in zip(cand, inside) if hit]
+        return cand, kept, regions or None
+
+    def _cow_dml(
+        self,
+        spark: SparkSession,
+        mode: str,
+        clauses: list[tuple[str, str | None, str, dict | None]],
+        *,
+        source: DataFrame | None = None,
+        keys: tuple[str, ...] = (),
+        batch_name: str = "",
+        prune: tuple[str, float, float] | None = None,
+        partition_eq: dict | None = None,
+        stats_cols: tuple[str, ...] = (),
+        bloom_cols: tuple[str, ...] = (),
+        change_feed: bool = False,
+        partition_by: tuple[str, ...] = (),
+        extra: dict | None = None,
+    ) -> int:
+        """THE copy-on-write DML kernel: every row-level DML method is a
+        clause list over it (Delta runs DELETE, UPDATE and MERGE as one
+        find-touched-files-then-rewrite command the same way).
+
+        ``clauses`` is an ordered list of ``(scope, condition, action,
+        set)``. Scopes: ``"matched"`` (a target row whose key appears in
+        ``source``), ``"target"`` (a target row no source row matches —
+        every row of a predicate DML, which has no source; MERGE's NOT
+        MATCHED BY SOURCE) and ``"source"`` (a source row no target row
+        matches). The condition is a SQL predicate over the target row
+        (over the source row for scope ``"source"``; ``None`` = always);
+        NULL acts like false. Actions: ``"delete"``, ``"update"`` (with
+        ``set`` = {column: SQL expression over the PRE-update target
+        row}, each cast to the column's type; ``set=None`` takes the
+        matched source row) and ``"insert"`` (the source row). Within a
+        scope the FIRST clause whose condition holds acts; a target row
+        no clause acts on is kept unchanged and a source row no clause
+        acts on is dropped. Keys match by SQL equality, so a NULL key
+        never matches; every matched target row takes its source row
+        (two target rows sharing a key both update — Delta's rule).
+
+        1. Scope. A predicate DML rewrites the files its ``prune`` box
+           and ``partition_eq`` values admit (:meth:`_dml_scope`). A
+           keyed DML locates the files holding a source key — one
+           left-semi join of the table against the size-gated broadcast
+           key set, grouped to file granularity by ``input_file_name``
+           (the collect is file-count-sized) — plus, with a
+           ``"target"`` clause, every file its scope admits. Both sides
+           of the path match go through ``os.path.realpath``, and a
+           located file no manifest entry names raises: a silent miss
+           would append updates without removing the rows they replace.
+           The source batch is ingest-sized by contract and checked for
+           duplicate keys in one aggregate (count_distinct over a
+           STRUCT: null-safe, like ``distinct().count()``).
+        2. One read of the touched files (merge-on-read deletes applied:
+           rewritten files get a new sequence number). A keyed DML
+           unions it with the source batch and pairs rows by a window
+           over each key: full-outer-join semantics for one exchange.
+        3. One CASE WHEN gives each row its acting clause and one
+           explode turns it into tagged copies: ``__data__`` (the row the
+           new version holds), and with ``change_feed`` its change rows
+           (``delete``; ``update_preimage`` + ``update_postimage``;
+           ``insert``). Every new row passes the table's CHECK
+           constraints first. An unpartitioned table writes all copies
+           in ONE tagged ``_write_data`` job; a partitioned one writes
+           its data under ``partition_by`` and its change rows in a
+           second, tagged job.
+        4. Publish through :meth:`_publish_cow_serializable` with the
+           scope as the read set. An ``Observation`` riding the write
+           counts the rows a clause acted on; when none did and the
+           caller passed no ``extra``, nothing is published (a plain
+           stream would die on a data-changing version that changed no
+           row) and the written files are removed again — no manifest
+           references them, and :meth:`cleanup_orphans` reclaims them if
+           the process dies first. A caller's ``extra`` (the stream
+           sink's exactly-once ledger) always publishes."""
+        from urllib.parse import unquote, urlparse
+
+        from pyspark.sql import Observation, Window
+
+        version = self.latest_version()
+        if version is None:
+            raise ValueError("snapshot table has no committed version")
+        cand, kept, regions = self._dml_scope(version, prune, partition_eq)
+        if source is None and not cand:
+            return version
+        schema = self._schema(version)
+        n, acted, new_entries = 0, 0, []
+
+        def holds(cond: str):
+            return F.expr(f"coalesce(({cond}), false)")
+
+        if source is not None:
+            source = source.persist()
+        try:
+            if source is not None:
+                key_batch = source.select(*keys)
+                n, nd = key_batch.agg(
+                    F.count(F.lit(1)), F.count_distinct(F.struct(*keys))
+                ).first()
+                if n != nd:
+                    raise ValueError(
+                        f"{batch_name} has duplicate keys ({n} rows, {nd} "
+                        f"distinct {tuple(keys)})"
+                    )
+                entries = self._data_entries(version)
+                found: set[str] = set()
+                if n and entries:
+                    gated = (
+                        F.broadcast(key_batch)
+                        if n <= self.MOR_BROADCAST_ROW_LIMIT
+                        else key_batch
+                    )
+                    files = self._open_files(
+                        spark, version, [e["path"] for e in entries]
+                    )
+                    for r in (
+                        files.withColumn("_file", F.input_file_name())
+                        .join(gated, list(keys), "left_semi")
+                        .select("_file")
+                        .distinct()
+                        .collect()
+                    ):
+                        found.add(os.path.realpath(unquote(urlparse(r[0]).path)))
+                by_real = {os.path.realpath(e["path"]): e for e in entries}
+                if found - set(by_real):
+                    raise RuntimeError(
+                        "affected files match no manifest entry (path "
+                        f"normalization bug): {sorted(found - set(by_real))[:3]}"
+                    )
+                if not any(s == "target" for s, *_ in clauses):
+                    cand, regions = [], []
+                cand = [by_real[p] for p in sorted(found)] + [
+                    e for e in cand if os.path.realpath(e["path"]) not in found
+                ]
+                touched = {e["path"] for e in cand}
+                kept = [e for e in entries if e["path"] not in touched]
+                keyed, scoped = (
+                    self._key_partition_regions(entries, keys, key_batch),
+                    regions,
+                )
+                regions = (
+                    None
+                    if keyed is None or scoped is None
+                    else lambda: keyed() + scoped
+                )
+            if cand or n:
+                tgt = self._read_with_deletes(spark, version, cand)
+                schema = schema or tgt.schema
+                if source is not None and any(
+                    a != "delete" and set_ is None for *_, a, set_ in clauses
+                ):
+                    schema = _merge_schemas(schema, source.schema)
+                old = [
+                    F.col(f.name)
+                    if f.name in tgt.columns
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in schema.fields
+                ]
+                rows, is_t, scope = tgt, F.lit(True), {"target": F.lit(True)}
+                if source is not None:
+                    # target and source rows in ONE key-clustered pass: a
+                    # window over each key pairs a target row with its
+                    # source row (one exchange, where a full outer join
+                    # shuffles each side on its own)
+                    k = [F.col(c).alias(f"__k{i}") for i, c in enumerate(keys)]
+                    srow = F.struct(
+                        *[
+                            (F.col(f.name) if f.name in source.columns else F.lit(None))
+                            .cast(f.dataType)
+                            .alias(f.name)
+                            for f in schema.fields
+                        ]
+                    )
+                    flags = [
+                        holds(c).alias(f"__c{i}")
+                        for i, (s, c, *_) in enumerate(clauses)
+                        if s == "source" and c is not None
+                    ]
+                    rows = tgt.select(*k, "*", F.lit(True).alias("__t")).unionByName(
+                        source.select(*k, srow.alias("__s"), *flags),
+                        allowMissingColumns=True,
+                    )
+                    free = F.lit(False)  # a NULL key component never matches
+                    for i in range(len(keys)):
+                        free = free | F.col(f"__k{i}").isNull()
+                    w = Window.partitionBy(*[f"__k{i}" for i in range(len(keys))])
+                    is_t = F.col("__t").isNotNull()
+                    rows = rows.withColumns(
+                        {
+                            "__s": F.when(
+                                is_t & ~free, F.first("__s", True).over(w)
+                            ).otherwise(F.col("__s")),
+                            "__m": ~free & F.max("__t").over(w).isNotNull(),
+                        }
+                    )
+                    scope = {
+                        "matched": is_t & F.col("__s").isNotNull(),
+                        "target": is_t & F.col("__s").isNull(),
+                        "source": ~is_t & ~F.col("__m"),
+                    }
+                act = None
+                for i, (s, c, *_) in enumerate(clauses):
+                    hit = scope[s]
+                    if c is not None:
+                        hit = hit & (F.col(f"__c{i}") if s == "source" else holds(c))
+                    act = F.when(hit, i) if act is None else act.when(hit, i)
+
+                def copy(tag: str, cols: list, new: bool = False):
+                    return F.struct(
+                        F.lit(tag).alias("_chg"), F.lit(new).alias("__new"), *cols
+                    )
+
+                copies = F.when(
+                    F.col("__a").isNull() & is_t,
+                    F.array(copy(self._DATA_TAG, old)),
+                )
+                for i, (*_, a, set_) in enumerate(clauses):
+                    if a == "delete":
+                        out = [copy("delete", old)] if change_feed else []
+                    else:
+                        new = [
+                            F.col("__s")[f.name].alias(f.name)
+                            if set_ is None
+                            else F.expr(set_[f.name]).cast(f.dataType).alias(f.name)
+                            if f.name in set_
+                            else o
+                            for f, o in zip(schema.fields, old)
+                        ]
+                        out = [copy(self._DATA_TAG, new, True)]
+                        if change_feed and a == "update":
+                            out += [
+                                copy("update_preimage", old),
+                                copy("update_postimage", new),
+                            ]
+                        elif change_feed:
+                            out.append(copy("insert", new))
+                    if out:
+                        copies = copies.when(F.col("__a") == i, F.array(*out))
+                obs = Observation(f"cow-dml-{uuid.uuid4().hex}")
+                # the count reads a column, not the clause CASE: a metric
+                # over an expression with literals compiles a new class on
+                # every call
+                fused = (
+                    rows.withColumn("__a", act)
+                    .observe(obs, F.count("__a").alias("acted"))
+                    .select(F.inline(copies))
+                )
+                if self.constraints(version):
+                    self._enforce_constraints(
+                        fused.filter("__new").drop("_chg", "__new"), version
+                    )
+                fused = fused.drop("__new")
+                is_data = F.col("_chg") == self._DATA_TAG
+                if change_feed and not partition_by:
+                    new_entries = self._write_data(
+                        fused,
+                        stats_cols,
+                        bloom_cols,
+                        change_tag_col="_chg",
+                        data_tag=self._DATA_TAG,
+                    )
+                else:
+                    new_entries = self._write_data(
+                        fused.filter(is_data).drop("_chg"),
+                        stats_cols,
+                        bloom_cols,
+                        partition_by,
+                    )
+                acted = obs.get["acted"]
+                if acted and change_feed and partition_by:
+                    new_entries += self._write_data(
+                        fused.filter(~is_data), (), change_tag_col="_chg"
+                    )
+        finally:
+            if source is not None:
+                source.unpersist(blocking=False)
+        if not acted and not extra:
+            for d in {
+                os.path.relpath(e["path"], self.data_dir).split(os.sep)[0]
+                for e in new_entries
+            }:
+                shutil.rmtree(os.path.join(self.data_dir, d), ignore_errors=True)
+            return version
+        if change_feed:
+            extra = {**(extra or {}), "cdf": True}
+        kept_paths = {e["path"] for e in kept} | {
+            e["path"] for e in self._delete_entries(version)
+        }
+        return self._publish_cow_serializable(
+            version,
+            kept_paths,
+            new_entries,
+            mode,
+            schema,
+            extra,
+            read_regions=regions,
+        )
 
     def delete_where(
         self,
@@ -2035,138 +2352,25 @@ class SnapshotTable:
         of raising (Delta's write-serializable partition-disjoint DML).
         Caller contract, same as ``prune``: the condition must not
         match rows outside the declared scope. Files without stats for
-        the prune column are conservatively rewritten. The old version still
-        shows the deleted rows (time travel) until retention expires it —
-        real erasure compliance = delete_where + expire_versions, which is
-        exactly how Delta/Iceberg document it."""
-        version = self.latest_version()
-        if version is None:
-            raise ValueError("snapshot table has no committed version")
-        entries = self._data_entries(version)
-        # manifest stats/partition keys are PHYSICAL under column
-        # mapping; the condition string stays logical (it runs on the
-        # logically-named read)
-        cmap = self.column_mapping(version)
-        if cmap:
-            if prune is not None:
-                prune = (cmap.get(prune[0], prune[0]), prune[1], prune[2])
-            if partition_eq is not None:
-                partition_eq = {
-                    self._translate_spec(k, cmap): v
-                    for k, v in partition_eq.items()
-                }
-        kept: list[dict] = []
-        if partition_eq is not None:
-            # partition-scoped DML (``DELETE ... WHERE p = 'b' AND ...``):
-            # files recording a different partition value are untouched
-            # BY PROOF, which both bounds the rewrite to the partition's
-            # files and narrows the declared read set so a concurrent
-            # mutation of a DIFFERENT partition rebases instead of
-            # conflicting (write-serializable disjoint-partition DML)
-            entries, part_kept = self._partition_eq_split(
-                entries, partition_eq
-            )
-            kept += part_kept
-        if prune is not None:
-            col, lo, hi = prune
-            cand = []
-            for e in entries:
-                rng = e.get("stats", {}).get(col)
-                (
-                    cand
-                    if self._stats_box_overlaps(rng, lo, hi)
-                    else kept
-                ).append(e)
-        else:
-            cand = entries
-        if not cand:
-            return version
-        # DELETE semantics are "remove rows where the condition is TRUE";
-        # a row where it evaluates NULL (NULL key) is NOT matched and must
-        # SURVIVE. A bare NOT(condition) filter would drop those rows too
-        # (NOT NULL is NULL under three-valued logic) — an unrequested
-        # erasure Delta/Iceberg DELETE would never perform (r10 review).
-        # MOR deletes are applied to the rewrite read: the rewritten files
-        # get a NEW sequence number, so a row resurrected here would
-        # permanently escape its delete file.
-        extra = None
-        if change_feed and not partition_by:
-            # CDF CHANGE FILES (Delta enableChangeDataFeed on DELETE): the
-            # commit also records the REMOVED rows' full pre-images as
-            # kind="change" files — invisible to every read path, but the
-            # streaming change feed emits them as _change_type='delete'
-            # rows, so a COW predicate purge no longer kills (or hides
-            # from) downstream incremental consumers. Survivors and
-            # pre-images split in ONE pass over the affected files (one
-            # tagged write — guide §8: the rows are read once, routed by
-            # the predicate into data vs change directories; previously
-            # two full reads + two write jobs); the change files expire
-            # with this version's manifest.
-            marked = self._read_with_deletes(
-                spark, version, cand
-            ).withColumn(
-                "_chg",
-                F.when(
-                    F.expr(f"coalesce(({condition}), false)"),
-                    F.lit("delete"),
-                ).otherwise(F.lit("__data__")),
-            )
-            new_entries = self._write_data(
-                marked,
-                stats_cols,
-                bloom_cols,
-                change_tag_col="_chg",
-                data_tag="__data__",
-            )
-            extra = {"cdf": True}
-        else:
-            survivors = self._read_with_deletes(
-                spark, version, cand
-            ).filter(f"NOT coalesce(({condition}), false)")
-            new_entries = self._write_data(
-                survivors, stats_cols, bloom_cols, partition_by
-            )
-            if change_feed:
-                # partitioned CDF delete keeps the two-pass shape: the
-                # table-partitioned data write and the unpartitioned
-                # change write cannot share one partitionBy clause
-                removed = self._read_with_deletes(
-                    spark, version, cand
-                ).filter(f"coalesce(({condition}), false)")
-                new_entries = new_entries + self._write_change_set(
-                    [(removed, "delete")],
-                    self._schema(version) or removed.schema,
-                )
-                extra = {"cdf": True}
-        kept_paths = {e["path"] for e in kept} | {
-            e["path"] for e in self._delete_entries(version)
-        }
-        # the read set is the prune box / partition scope when given (a
-        # disjoint concurrent append or partition-disjoint mutation
-        # rebases); an unscoped predicate reads the whole table, so any
-        # concurrent addition conflicts. Caller contract (same as
-        # ``prune``): the condition must not match rows outside the
-        # declared scope.
-        regions: list[dict] = []
-        if prune is not None:
-            regions.append({"where": prune})
-        if partition_eq is not None:
-            regions.append(
-                {
-                    "partition_in": {
-                        c: {hive_partition_value(v)}
-                        for c, v in partition_eq.items()
-                    }
-                }
-            )
-        return self._publish_cow_serializable(
-            version,
-            kept_paths,
-            new_entries,
+        the prune column are conservatively rewritten. DELETE removes
+        rows where the condition is TRUE: a row where it evaluates NULL
+        survives (three-valued logic). ``change_feed=True`` records the
+        removed rows as ``delete`` change files. A delete matching no
+        row publishes nothing and returns the current version. The old
+        version still shows the deleted rows (time travel) until
+        retention expires it — real erasure compliance = delete_where +
+        expire_versions, which is exactly how Delta/Iceberg document
+        it. One clause over :meth:`_cow_dml`."""
+        return self._cow_dml(
+            spark,
             "delete",
-            self._schema(version),
-            extra,
-            read_regions=regions if regions else None,
+            [("target", condition, "delete", None)],
+            prune=prune,
+            partition_eq=partition_eq,
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+            change_feed=change_feed,
+            partition_by=partition_by,
         )
 
     def update_where(
@@ -2194,179 +2398,41 @@ class SnapshotTable:
         (three-valued logic), expressions are cast to the column's
         declared type (an UPDATE can never retype a column), and SET
         columns must already exist — adding columns is schema
-        evolution, not UPDATE. ``prune`` is the predicate's stats box
-        (:meth:`delete_where`'s contract): files whose recorded
-        [min, max] cannot intersect it carry over byte-identical, so a
-        targeted re-price/backfill is O(affected files), never
+        evolution, not UPDATE. ``prune``/``partition_eq`` are
+        :meth:`delete_where`'s scope contract: files whose recorded
+        [min, max] cannot intersect the box carry over byte-identical,
+        so a targeted re-price/backfill is O(affected files), never
         O(table), at 100 TB. ``change_feed=True`` records Delta CDC
         change files (``update_preimage``/``update_postimage`` pairs).
-        A lost CAS race classifies + auto-rebases like every RMW path
+        An update matching no row publishes nothing. A lost CAS race
+        classifies + auto-rebases like every RMW path
         (:meth:`_publish_cow_serializable`). Reference analog: none —
         the reference can only clobber whole objects
-        (``output_handler_s3.py:41-53``)."""
+        (``output_handler_s3.py:41-53``). One clause over
+        :meth:`_cow_dml`."""
         set_ = dict(set)
         if not set_:
             raise ValueError("update_where requires at least one SET column")
         version = self.latest_version()
-        if version is None:
-            raise ValueError("snapshot table has no committed version")
-        schema = self._schema(version)
+        schema = self._schema(version) if version is not None else None
         if schema is not None:
-            known = {f.name for f in schema.fields}
-            missing = sorted(set_.keys() - known)
+            missing = sorted(set_.keys() - {f.name for f in schema.fields})
             if missing:
                 raise ValueError(
                     f"SET columns {missing} do not exist in the table "
                     "schema; add columns via an evolving append, not "
                     "UPDATE"
                 )
-        entries = self._data_entries(version)
-        cmap = self.column_mapping(version)
-        if cmap:
-            if prune is not None:
-                prune = (cmap.get(prune[0], prune[0]), prune[1], prune[2])
-            if partition_eq is not None:
-                partition_eq = {
-                    self._translate_spec(k, cmap): v
-                    for k, v in partition_eq.items()
-                }
-        kept: list[dict] = []
-        if partition_eq is not None:
-            # partition-scoped UPDATE: see delete_where — bounds the
-            # rewrite AND the declared read set to the partition's files
-            entries, part_kept = self._partition_eq_split(
-                entries, partition_eq
-            )
-            kept += part_kept
-        if prune is not None:
-            col, lo, hi = prune
-            cand = []
-            for e in entries:
-                rng = e.get("stats", {}).get(col)
-                (
-                    cand
-                    if self._stats_box_overlaps(rng, lo, hi)
-                    else kept
-                ).append(e)
-        else:
-            cand = entries
-        if not cand:
-            return version
-        src = self._read_with_deletes(spark, version, cand)
-        marked = src.withColumn(
-            "_u", F.expr(f"coalesce(({condition}), false)")
-        )
-        fields = (
-            list(schema.fields)
-            if schema is not None
-            else [src.schema[c] for c in src.columns]
-        )
-        # ONE projection: every SET expression reads the pre-update row
-        projected = []
-        for f in fields:
-            expr = set_.get(f.name)
-            if expr is None:
-                projected.append(F.col(f.name))
-            else:
-                projected.append(
-                    F.when(
-                        F.col("_u"), F.expr(expr).cast(f.dataType)
-                    )
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                )
-        out = marked.select(*projected, F.col("_u"))
-        self._enforce_constraints(out.filter("_u").drop("_u"), version)
-        extra = None
-        if change_feed and not partition_by:
-            # CDF UPDATE in ONE pass over the affected files (guide §8:
-            # move the heavy bytes once — previously three full passes:
-            # the data write, the pre-image write, the post-image
-            # write). Each matched row explodes into its new data row +
-            # its pre-image + its post-image; an unmatched row passes
-            # through as data alone (its post-update values ARE its old
-            # values). One tagged write routes the copies into data vs
-            # change directories; file CONTENTS are identical to the
-            # three-write shape this replaces.
-            names = [f.name for f in fields]
-
-            def _tagged(tag: str, exprs) -> F.Column:
-                return F.struct(
-                    F.lit(tag).alias("_chg"),
-                    *[e.alias(n) for e, n in zip(exprs, names)],
-                )
-
-            row_old = [F.col(n) for n in names]
-            row_new = [
-                (
-                    F.expr(set_[f.name]).cast(f.dataType)
-                    if f.name in set_
-                    else F.col(f.name)
-                )
-                for f in fields
-            ]
-            copies = F.when(
-                F.col("_u"),
-                F.array(
-                    _tagged("__data__", row_new),
-                    _tagged("update_preimage", row_old),
-                    _tagged("update_postimage", row_new),
-                ),
-            ).otherwise(F.array(_tagged("__data__", row_old)))
-            fused = marked.select(F.explode(copies).alias("_x")).select(
-                *[F.col(f"_x.{n}").alias(n) for n in names],
-                F.col("_x._chg").alias("_chg"),
-            )
-            new_entries = self._write_data(
-                fused,
-                stats_cols,
-                bloom_cols,
-                change_tag_col="_chg",
-                data_tag="__data__",
-            )
-            extra = {"cdf": True}
-        else:
-            new_entries = self._write_data(
-                out.drop("_u"), stats_cols, bloom_cols, partition_by
-            )
-            if change_feed:
-                # partitioned CDF update keeps the split shape (the
-                # partitioned data write and the unpartitioned change
-                # write cannot share one partitionBy clause), but both
-                # change kinds land in ONE tagged write
-                from pyspark.sql.types import StructType
-
-                new_entries += self._write_change_set(
-                    [
-                        (marked.filter("_u").drop("_u"), "update_preimage"),
-                        (out.filter("_u").drop("_u"), "update_postimage"),
-                    ],
-                    StructType(fields),
-                )
-                extra = {"cdf": True}
-        kept_paths = {e["path"] for e in kept} | {
-            e["path"] for e in self._delete_entries(version)
-        }
-        regions: list[dict] = []
-        if prune is not None:
-            regions.append({"where": prune})
-        if partition_eq is not None:
-            regions.append(
-                {
-                    "partition_in": {
-                        c: {hive_partition_value(v)}
-                        for c, v in partition_eq.items()
-                    }
-                }
-            )
-        return self._publish_cow_serializable(
-            version,
-            kept_paths,
-            new_entries,
+        return self._cow_dml(
+            spark,
             "update",
-            schema,
-            extra,
-            read_regions=regions if regions else None,
+            [("target", condition, "update", set_)],
+            prune=prune,
+            partition_eq=partition_eq,
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+            change_feed=change_feed,
+            partition_by=partition_by,
         )
 
     @classmethod
@@ -2983,131 +3049,36 @@ class SnapshotTable:
     ) -> int:
         """COPY-ON-WRITE MERGE (Delta MERGE INTO / upsert): rows of
         ``updates`` REPLACE table rows with the same key; unmatched update
-        rows are inserts. Shape: (1) find the files that contain a
-        matching key — one left-semi equi-join of the table against the
-        BROADCAST update batch, grouped to file granularity via
-        ``input_file_name`` (the collect is file-count-sized, manifest
-        metadata, never row-proportional); (2) rewrite only those files
-        with matched rows anti-joined out; (3) write the update batch
-        itself; (4) publish untouched files + rewrites + updates as one
-        atomic version. Cost is O(affected files + batch) — the merge the
-        reference cannot express at all (its sinks clobber whole objects,
-        ``output_handler_s3.py:41-53``). Update batches are ingest-sized
-        by contract (a table-sized batch should be an overwrite commit
-        instead); the key-set broadcast is size-gated regardless
-        (:meth:`_rewrite_minus_keys`), so a contract-breaking mega-batch
-        degrades to shuffled joins instead of OOMing executors."""
-        version = self.latest_version()
-        if version is None:
-            raise ValueError("snapshot table has no committed version")
-        keys = list(key_cols)
-        # ingest-sized by contract and consumed by several downstream
-        # jobs (dup check, file locate, batch write, CDF splits) —
-        # persist once instead of re-deriving per job (guide §5, the
-        # merge_into discipline). Unpersisted on EVERY exit path below
-        # (try/finally — an OCC conflict or constraint raise must not
-        # leak the cache for the session lifetime).
-        updates = updates.persist()
-        removed: DataFrame | None = None
-        try:
-            key_batch = updates.select(*keys)
-            # Delta MERGE raises on multiple source matches for one
-            # target row; silently inserting both duplicates corrupts a
-            # keyed table with no error (r10 advice). ONE aggregate job
-            # (was two full passes): count_distinct over a STRUCT of the
-            # key columns uses null-safe grouping equality, exactly like
-            # distinct().count() did (NULL-key parity pinned in
-            # tests/test_round17_opt.py).
-            _dup = key_batch.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(F.struct(*keys)).alias("nd"),
-            ).collect()[0]
-            n, nd = int(_dup["n"]), int(_dup["nd"])
-            if n != nd:
-                raise ValueError(
-                    f"merge_upsert update batch has duplicate keys "
-                    f"({n} rows, {nd} distinct {tuple(keys)})"
-                )
-            kept_paths, _ents, removed, survivors = self._rewrite_minus_keys(
-                spark,
-                version,
-                key_batch,
-                keys,
-                stats_cols,
-                bloom_cols,
-                n_keys=n,
-                capture_removed=change_feed,
-                partition_by=partition_by,
-                defer_write=True,
-            )
-            schema = _merge_schemas(self._schema(version), updates.schema)
-            up = updates
-            for f in schema.fields:  # align update batch to evolved shape
-                if f.name not in updates.columns:
-                    up = up.withColumn(f.name, F.lit(None).cast(f.dataType))
-            up_sel = up.select([f.name for f in schema.fields])
-            self._enforce_constraints(up_sel, version)
-            # ONE data write for the whole merge: rewritten survivors +
-            # the update batch land in a single Spark job (they were two
-            # — guide §1.2/§5; the union adds no shuffle, each input
-            # partition still writes its own file). Survivors read under
-            # the pre-evolution schema NULL-fill any evolved columns —
-            # the same values readers would fill in.
-            data_df = up_sel
-            if survivors is not None:
-                data_df = survivors.unionByName(
-                    up_sel, allowMissingColumns=True
-                ).select([f.name for f in schema.fields])
-            new_entries = self._write_data(
-                data_df, stats_cols, bloom_cols, partition_by
-            )
-            if change_feed:
-                # CDF change files for MERGE (Delta CDC semantics):
-                # replaced rows as update_preimage, their replacements
-                # as update_postimage, unmatched update rows as insert.
-                # ONE tagged write lands every change kind in a single
-                # job (_write_change_set; was one job per kind), and the
-                # postimage/insert split is ONE left join against the
-                # matched key set instead of a semi + anti pair.
-                if removed is not None:
-                    # two jobs read `removed` (the fused change write and
-                    # the matched-key build) — persist the one
-                    # rewrite-scan + semi-join (guide §5)
-                    removed = removed.persist()
-                    matched = removed.select(*keys).distinct()
-                    split = up_sel.join(
-                        matched.withColumn("_mt", F.lit(1)), keys, "left"
-                    ).withColumn(
-                        "_chg",
-                        F.when(
-                            F.col("_mt").isNotNull(),
-                            F.lit("update_postimage"),
-                        ).otherwise(F.lit("insert")),
-                    )
-                    new_entries += self._write_change_set(
-                        [(removed, "update_preimage"), (split, None)],
-                        schema,
-                    )
-                else:
-                    new_entries += self._write_change_set(
-                        [(up_sel, "insert")], schema
-                    )
-                extra = {**(extra or {}), "cdf": True}
-            return self._publish_cow_serializable(
-                version,
-                kept_paths,
-                new_entries,
-                "merge",
-                schema,
-                extra,
-                read_regions=self._key_partition_regions(
-                    self._data_entries(version), keys, key_batch
-                ),
-            )
-        finally:
-            if removed is not None:
-                removed.unpersist(blocking=False)
-            updates.unpersist(blocking=False)
+        rows are inserts. Shape (:meth:`_cow_dml`, clauses update when
+        matched + insert when not matched): locate the files that contain
+        a matching key (one left-semi join against the BROADCAST key set,
+        grouped to file granularity via ``input_file_name`` — the collect
+        is file-count-sized, never row-proportional), rewrite only those
+        files joined to the batch, and publish untouched files +
+        rewrites + inserts as one atomic version. Cost is O(affected
+        files + batch) — the merge the reference cannot express at all
+        (its sinks clobber whole objects, ``output_handler_s3.py:41-53``).
+        Update batches are ingest-sized by contract (a table-sized batch
+        should be an overwrite commit instead); the key-set broadcast is
+        size-gated regardless, so a contract-breaking mega-batch degrades
+        to shuffled joins instead of OOMing executors. Duplicate keys in
+        the batch raise. ``change_feed=True`` records replaced rows as
+        ``update_preimage``, their replacements as ``update_postimage``
+        and inserted rows as ``insert``. ``extra`` rides the published
+        manifest (the stream sink's exactly-once ledger)."""
+        return self._cow_dml(
+            spark,
+            "merge",
+            [("matched", None, "update", None), ("source", None, "insert", None)],
+            source=updates,
+            keys=tuple(key_cols),
+            batch_name="merge_upsert update batch",
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+            change_feed=change_feed,
+            partition_by=partition_by,
+            extra=extra,
+        )
 
     def merge_into(
         self,
@@ -3171,479 +3142,88 @@ class SnapshotTable:
         (``when_matched="update"``, optional ``matched_condition``)
         stays as the single-clause shorthand.
 
-        Shape and cost are :meth:`merge_upsert`'s: one file-granular
-        left-semi locate (collect is file-count-sized), a rewrite of
-        ONLY the files holding an acted row, O(affected + batch) —
-        the condition can only NARROW the rewrite; the clause decision
-        is one whole-stage-codegen CASE WHEN over the rewritten rows,
-        never a per-clause pass. The source-absent delete is inherently
+        Shape and cost are :meth:`merge_upsert`'s (one clause list over
+        :meth:`_cow_dml`): one file-granular left-semi locate (collect
+        is file-count-sized), a rewrite of ONLY the files holding a
+        matched row, O(affected + batch); the clause decision is one
+        whole-stage-codegen CASE WHEN over the rewritten rows, never a
+        per-clause pass. The source-absent clause is inherently
         table-proportional (any file may hold a source-absent row);
         bound it with ``nmbs_prune`` — the stats box of
         ``nmbs_condition``, the :meth:`delete_where` contract: files
         whose recorded [min, max] cannot intersect it carry over
         untouched. Keys are ingest-sized by contract; broadcasts are
         size-gated (:data:`MOR_BROADCAST_ROW_LIMIT`). NULL condition
-        evaluations act like false (three-valued logic: row kept)."""
+        evaluations act like false (three-valued logic: row kept). A
+        merge acting on no row publishes nothing."""
         if isinstance(when_matched, str):
-            if when_matched not in ("update", "delete"):
-                raise ValueError(
-                    f"when_matched must be 'update' or 'delete', got "
-                    f"{when_matched!r}"
-                )
-            clauses: list[tuple[str | None, str]] = [
-                (matched_condition, when_matched)
-            ]
+            matched = [(matched_condition, when_matched)]
+        elif matched_condition is not None:
+            raise ValueError(
+                "matched_condition composes with the string form only; give "
+                "per-clause conditions in the when_matched list"
+            )
         else:
-            if matched_condition is not None:
+            matched = [(cond, action) for cond, action in when_matched]
+            if not matched:
+                raise ValueError("when_matched list must name at least one clause")
+            if any(cond is None for cond, _action in matched[:-1]):
                 raise ValueError(
-                    "matched_condition composes with the string form "
-                    "only; give per-clause conditions in the "
-                    "when_matched list"
+                    "only the LAST matched clause may omit its condition — "
+                    "first-match-wins makes every later clause unreachable"
                 )
-            clauses = [(cond, action) for cond, action in when_matched]
-            if not clauses:
+        for _cond, action in matched:
+            if action not in ("update", "delete"):
                 raise ValueError(
-                    "when_matched list must name at least one clause"
+                    f"matched-clause action must be 'update' or 'delete', got "
+                    f"{action!r}"
                 )
-            for cond, action in clauses:
-                if action not in ("update", "delete"):
-                    raise ValueError(
-                        f"matched-clause action must be 'update' or "
-                        f"'delete', got {action!r}"
-                    )
-            for cond, _action in clauses[:-1]:
-                if cond is None:
-                    raise ValueError(
-                        "only the LAST matched clause may omit its "
-                        "condition — first-match-wins makes every "
-                        "later clause unreachable"
-                    )
         if not_matched_by_source not in (None, "delete", "update"):
             raise ValueError(
                 "not_matched_by_source must be None, 'delete', or "
                 f"'update', got {not_matched_by_source!r}"
             )
-        if not_matched_by_source == "update" and not nmbs_set:
+        if (not_matched_by_source == "update") != bool(nmbs_set):
             raise ValueError(
-                "not_matched_by_source='update' requires nmbs_set "
+                "nmbs_set only composes with not_matched_by_source='update'"
+                if nmbs_set
+                else "not_matched_by_source='update' requires nmbs_set "
                 "({column: SQL expression})"
             )
-        if not_matched_by_source != "update" and nmbs_set:
-            raise ValueError(
-                "nmbs_set only composes with not_matched_by_source="
-                "'update'"
-            )
         version = self.latest_version()
-        if version is None:
-            raise ValueError("snapshot table has no committed version")
-        if nmbs_set:
-            # validate SET columns before any job runs (hoists the only
-            # mid-body config-error raise above the persist below, so no
-            # error path leaks a cached batch) — against the SAME
-            # effective schema the later check uses: the version schema,
-            # merged with the source's when an update/insert clause can
-            # evolve it (schema evolution may legitimately add the SET
-            # column in this very merge)
-            known_now = self._schema(version)
-            if known_now is not None and (
-                insert_unmatched
-                or any(action == "update" for _c, action in clauses)
-            ):
-                known_now = _merge_schemas(known_now, source.schema)
-            if known_now is not None:
-                unknown_set = sorted(
-                    set(nmbs_set) - {f.name for f in known_now.fields}
-                )
-                if unknown_set:
-                    raise ValueError(
-                        f"nmbs_set columns {unknown_set} do not exist "
-                        "in the table schema"
-                    )
-        keys = list(key_cols)
-        # The source batch is ingest-sized by contract and consumed by
-        # several downstream jobs (dup check, file locate, the fused
-        # batch write, CDF writes) — persist it once instead of
-        # re-deriving it per job (optimization guide §5: reuse ×
-        # recompute cost; the delete_where_mor persist discipline
-        # applied to MERGE). Unpersisted on EVERY exit path (try/finally
-        # — an OCC conflict, constraint violation, or clause error must
-        # not leak the cached frames for the session lifetime).
-        source = source.persist()
-        rw: DataFrame | None = None
-        try:
-            key_batch = source.select(*keys)
-            # ONE aggregate job for the duplicate-key check (was two full
-            # passes): count_distinct over a STRUCT of the key columns
-            # uses null-safe grouping equality, exactly like
-            # distinct().count() did (NULL-key parity pinned in
-            # tests/test_round17_opt.py).
-            _dup = key_batch.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(F.struct(*keys)).alias("nd"),
-            ).collect()[0]
-            n, nd = int(_dup["n"]), int(_dup["nd"])
-            if n != nd:
+        known = self._schema(version) if version is not None else None
+        if nmbs_set and known is not None:
+            # against the schema the merge writes: the version's, merged
+            # with the source's when an update/insert clause can evolve
+            # it (schema evolution may add the SET column in this merge)
+            if insert_unmatched or any(a == "update" for _c, a in matched):
+                known = _merge_schemas(known, source.schema)
+            unknown_set = sorted(set(nmbs_set) - {f.name for f in known.fields})
+            if unknown_set:
                 raise ValueError(
-                    f"merge_into source batch has duplicate keys "
-                    f"({n} rows, {nd} distinct {tuple(keys)})"
+                    f"nmbs_set columns {unknown_set} do not exist "
+                    "in the table schema"
                 )
-            gated = (
-                F.broadcast(key_batch)
-                if n <= self.MOR_BROADCAST_ROW_LIMIT
-                else key_batch
+        clauses = [("matched", c, a, None) for c, a in matched]
+        if not_matched_by_source is not None:
+            clauses.append(
+                ("target", nmbs_condition, not_matched_by_source, nmbs_set)
             )
-            entries = self._data_entries(version)
-            src_files = self._open_files(
-                spark, version, [e["path"] for e in entries]
-            )
-            affected_rows = (
-                src_files.withColumn("_file", F.input_file_name())
-                .join(gated, keys, "left_semi")
-                .select("_file")
-                .distinct()
-                .collect()
-            )
-            from urllib.parse import unquote, urlparse
-
-            affected = {
-                os.path.realpath(unquote(urlparse(r["_file"]).path))
-                for r in affected_rows
-            }
-            by_real = {os.path.realpath(e["path"]): e for e in entries}
-            unknown = affected - set(by_real)
-            if unknown:
-                raise RuntimeError(
-                    "affected files match no manifest entry (path "
-                    f"normalization bug): {sorted(unknown)[:3]}"
-                )
-            rewrite = [by_real[p] for p in affected]
-            if not_matched_by_source is not None:
-                # the source-absent clause may act in ANY file;
-                # nmbs_prune (the stats box of nmbs_condition) bounds
-                # the rewrite to files that can hold a condition-true
-                # row — delete_where's contract, files without stats
-                # conservatively rewritten
-                have = {e["path"] for e in rewrite}
-                for e in entries:
-                    if e["path"] in have:
-                        continue
-                    if nmbs_prune is not None:
-                        col, lo, hi = nmbs_prune
-                        rng = e.get("stats", {}).get(col)
-                        if not self._stats_box_overlaps(rng, lo, hi):
-                            continue  # provably no condition-true row
-                    rewrite.append(e)
-            kept_paths = (
-                {e["path"] for e in entries} - {e["path"] for e in rewrite}
-            ) | {e["path"] for e in self._delete_entries(version)}
-            has_update = any(action == "update" for _c, action in clauses)
-            schema = self._schema(version)
-            if has_update or insert_unmatched:
-                schema = _merge_schemas(schema, source.schema)
-            src_aligned = source
-            for f in schema.fields:
-                if f.name not in source.columns:
-                    src_aligned = src_aligned.withColumn(
-                        f.name, F.lit(None).cast(f.dataType)
-                    )
-            src_aligned = src_aligned.select(
-                [f.name for f in schema.fields]
-            )
-            survivors = None
-            removed_upd = None
-            removed_del = None
-            removed_nmbs = None
-            acted_keys = None
-            if rewrite:
-                # marker join: matched rows flagged, then ONE first-
-                # match-wins CASE WHEN assigns each row its firing
-                # clause index (NULL = no clause fired, row kept — SQL
-                # three-valued logic: a NULL condition never fires)
-                marker = gated.withColumn("_m", F.lit(1))
-                rw = self._read_with_deletes(spark, version, rewrite).join(
-                    marker, keys, "left"
-                )
-                cexpr = None
-                for i, (cond, _action) in enumerate(clauses):
-                    hit = F.col("_m").isNotNull()
-                    if cond is not None:
-                        hit = hit & F.expr(f"coalesce(({cond}), false)")
-                    cexpr = (
-                        F.when(hit, F.lit(i))
-                        if cexpr is None
-                        else cexpr.when(hit, F.lit(i))
-                    )
-                # one marked read of the affected files feeds EVERY
-                # consumer below (survivors, per-clause splits, matched
-                # keys, CDF pre-images) — unpersisted, the identical
-                # scan+join pipeline re-ran as up to six separate jobs
-                # (guide §5; measured 42 → 17 jobs on
-                # snapshot_merge_sync). Bounded at O(affected files +
-                # batch) like the rewrite itself.
-                rw = rw.withColumn("_c", cexpr).persist()
-                upd_idx = [
-                    i for i, (_c, a) in enumerate(clauses) if a == "update"
-                ]
-                del_idx = [
-                    i for i, (_c, a) in enumerate(clauses) if a == "delete"
-                ]
-                act = F.col("_c").isNotNull()
-                nmbs_act = F.lit(False)
-                if not_matched_by_source is not None:
-                    nmbs_act = F.col("_m").isNull()
-                    if nmbs_condition is not None:
-                        nmbs_act = nmbs_act & F.expr(
-                            f"coalesce(({nmbs_condition}), false)"
-                        )
-                survivors = rw.filter(~(act | nmbs_act)).drop("_m", "_c")
-                if upd_idx:
-                    removed_upd = rw.filter(
-                        F.col("_c").isin(upd_idx)
-                    ).drop("_m", "_c")
-                    acted_keys = removed_upd.select(*keys).distinct()
-                if del_idx:
-                    removed_del = rw.filter(
-                        F.col("_c").isin(del_idx)
-                    ).drop("_m", "_c")
-                if not_matched_by_source is not None:
-                    removed_nmbs = rw.filter(nmbs_act).drop("_m", "_c")
-            # matched source keys, computed from the AFFECTED FILES only
-            # (they hold every matching row by construction) —
-            # O(affected), never an O(table) distinct. Derived from the
-            # PERSISTED marked read instead of a second scan+semi-join
-            # of the same files: a row carries _m exactly when its key
-            # matched the (distinct-key) batch, so filter(_m IS NOT
-            # NULL) ≡ the left-semi join.
-            if rewrite:
-                matched_keys = (
-                    rw.filter(F.col("_m").isNotNull())
-                    .select(*keys)
-                    .distinct()
-                )
-            else:
-                matched_keys = None
-            # Every row class this merge writes is COLLECTED first and
-            # written in ONE Spark job per file kind at the end (guide
-            # §1.2/§5: one data write + one tagged change write per
-            # commit, was up to seven write jobs): new_rows gates the
-            # single constraint pass, data_frames the data write, chg
-            # the change write. The unions add no shuffle — each input
-            # partition still writes its own file.
-            new_rows: list[DataFrame] = []
-            chg: list[tuple[DataFrame, str | None]] = []
-            if acted_keys is not None:
-                # rows acted on by an UPDATE clause: their replacements
-                # are the source rows sharing the acted keys
-                postimage = src_aligned.join(
-                    F.broadcast(acted_keys)
-                    if n <= self.MOR_BROADCAST_ROW_LIMIT
-                    else acted_keys,
-                    keys,
-                    "left_semi",
-                )
-                new_rows.append(postimage)
-                if change_feed:
-                    chg.append((removed_upd, "update_preimage"))
-                    chg.append((postimage, "update_postimage"))
-            if change_feed and removed_del is not None:
-                chg.append((removed_del, "delete"))
-            if removed_nmbs is not None and not_matched_by_source == "update":
-                # WHEN NOT MATCHED BY SOURCE THEN UPDATE SET ...: the
-                # acted rows are TRANSFORMED in one projection reading
-                # the pre-update row (update_where's semantics), cast to
-                # the declared types, and written back
-                if schema is not None:
-                    unknown_set = sorted(
-                        set(nmbs_set) - {f.name for f in schema.fields}
-                    )
-                    if unknown_set:
-                        raise ValueError(
-                            f"nmbs_set columns {unknown_set} do not "
-                            "exist in the table schema"
-                        )
-                nmbs_after = removed_nmbs.select(
-                    *[
-                        (
-                            F.expr(nmbs_set[f.name])
-                            .cast(f.dataType)
-                            .alias(f.name)
-                            if f.name in nmbs_set
-                            else F.col(f.name)
-                        )
-                        for f in schema.fields
-                    ]
-                )
-                new_rows.append(nmbs_after)
-                if change_feed:
-                    chg.append((removed_nmbs, "update_preimage"))
-                    chg.append((nmbs_after, "update_postimage"))
-            elif change_feed and removed_nmbs is not None:
-                chg.append((removed_nmbs, "delete"))
-            if insert_unmatched:
-                unmatched = src_aligned
-                if matched_keys is not None:
-                    unmatched = src_aligned.join(
-                        matched_keys, keys, "left_anti"
-                    )
-                if insert_condition is not None:
-                    # WHEN NOT MATCHED AND cond THEN INSERT: the
-                    # predicate evaluates over the SOURCE row; failing
-                    # rows are simply not inserted (no clause fired)
-                    unmatched = unmatched.filter(
-                        F.expr(f"coalesce(({insert_condition}), false)")
-                    )
-                new_rows.append(unmatched)
-                if change_feed:
-                    chg.append((unmatched, "insert"))
-            new_entries: list[dict] = []
-            # postimage/nmbs_after/unmatched are already schema-aligned
-            # (they derive from src_aligned / a schema-field select);
-            # survivors may lack evolved columns — allowMissingColumns
-            # NULL-fills them, the same values readers would fill in
-            data_frames = (
-                [survivors] if survivors is not None else []
-            ) + new_rows
-            if new_rows:
-                # one constraint pass over every NEW row this merge
-                # writes (survivors passed their constraints at their
-                # original commit); a violation raises BEFORE any file
-                # is written
-                checked = new_rows[0]
-                for f in new_rows[1:]:
-                    checked = checked.unionByName(f)
-                self._enforce_constraints(checked, version)
-            if data_frames:
-                data_df = data_frames[0]
-                for f in data_frames[1:]:
-                    data_df = data_df.unionByName(
-                        f, allowMissingColumns=True
-                    )
-                data_df = data_df.select(
-                    [f.name for f in schema.fields]
-                )
-                new_entries = self._write_data(
-                    data_df, stats_cols, bloom_cols, partition_by
-                )
-            extra = None
-            if change_feed:
-                new_entries += self._write_change_set(chg, schema)
-                extra = {"cdf": True}
-            # read set: the keyed half is derivable when a key column is
-            # an identity partition column; NOT MATCHED BY SOURCE
-            # additionally reads every row its prune box admits (no box
-            # = whole table)
-            regions = self._key_partition_regions(entries, keys, key_batch)
-            if not_matched_by_source is not None:
-                if regions is None or nmbs_prune is None:
-                    regions = None
-                else:
-                    keyed = regions
-
-                    def regions() -> list[dict]:  # noqa: F811
-                        return keyed() + [{"where": nmbs_prune}]
-
-            return self._publish_cow_serializable(
-                version,
-                kept_paths,
-                new_entries,
-                "merge",
-                schema,
-                extra,
-                read_regions=regions,
-            )
-        finally:
-            source.unpersist(blocking=False)
-            if rw is not None:
-                rw.unpersist(blocking=False)
-
-    def _rewrite_minus_keys(
-        self,
-        spark: SparkSession,
-        version: int,
-        key_df: DataFrame,
-        keys: list[str],
-        stats_cols: tuple[str, ...],
-        bloom_cols: tuple[str, ...] = (),
-        n_keys: int | None = None,
-        capture_removed: bool = False,
-        partition_by: tuple[str, ...] = (),
-        defer_write: bool = False,
-    ) -> tuple[list[dict], list[dict], DataFrame | None, DataFrame | None]:
-        """Shared copy-on-write core of :meth:`merge_upsert` and
-        :meth:`delete_keys`: locate the files containing any key of
-        ``key_df`` (one left-semi join grouped to file granularity — the
-        collect is file-count-sized), rewrite only those with matched rows
-        anti-joined out. Returns (kept file paths, rewritten entries,
-        removed-rows frame when ``capture_removed`` — the CDF pre-image
-        source — else None, survivors frame). Under ``defer_write`` the
-        survivors are NOT written here: the frame comes back unwritten
-        (entries empty) so the caller can union it with its own new rows
-        into ONE write job (merge_upsert does — guide §1.2/§5: one write
-        pass per commit instead of one per row class).
-
-        Key batches are ingest-sized by CONTRACT, but the contract is now
-        enforced, not assumed: the key set is broadcast only under
-        :data:`MOR_BROADCAST_ROW_LIMIT` (``n_keys`` is the caller's
-        already-computed count, else one count job here); a mega-batch
-        falls back to shuffled joins instead of materializing on every
-        executor (r11 verdict item 2 applied to the COW path too).
-
-        Both sides of the path match go through ``os.path.realpath``: with
-        a relative base_dir plus a CWD change, or symlinked scratch paths,
-        abspath-vs-URI comparison can miss every affected file — and a
-        silent miss means merge_upsert APPENDS updates without removing
-        the matched rows (duplicate keys, no error). An affected URI that
-        maps to no manifest entry therefore raises instead of being
-        treated as untouched (r10 advice)."""
-        if n_keys is None:
-            n_keys = key_df.count()
-        gated = (
-            F.broadcast(key_df)
-            if n_keys <= self.MOR_BROADCAST_ROW_LIMIT
-            else key_df
+        if insert_unmatched:
+            clauses.append(("source", insert_condition, "insert", None))
+        return self._cow_dml(
+            spark,
+            "merge",
+            clauses,
+            source=source,
+            keys=tuple(key_cols),
+            batch_name="merge_into source batch",
+            prune=nmbs_prune,
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+            change_feed=change_feed,
+            partition_by=partition_by,
         )
-        entries = self._data_entries(version)
-        src = self._open_files(spark, version, [e["path"] for e in entries])
-        affected_rows = (
-            src.withColumn("_file", F.input_file_name())
-            .join(gated, keys, "left_semi")
-            .select("_file")
-            .distinct()
-            .collect()
-        )
-        from urllib.parse import unquote, urlparse
-
-        affected = {
-            os.path.realpath(unquote(urlparse(r["_file"]).path))
-            for r in affected_rows
-        }
-        by_real = {os.path.realpath(e["path"]): e for e in entries}
-        unknown = affected - set(by_real)
-        if unknown:
-            raise RuntimeError(
-                "affected files match no manifest entry (path normalization "
-                f"bug would silently skip the rewrite): {sorted(unknown)[:3]}"
-            )
-        rewrite = [by_real[p] for p in affected]
-        rewrite_paths = {e["path"] for e in rewrite}
-        kept_paths = (
-            {e["path"] for e in entries} - rewrite_paths
-        ) | {e["path"] for e in self._delete_entries(version)}
-        new_entries: list[dict] = []
-        removed: DataFrame | None = None
-        survivors: DataFrame | None = None
-        if rewrite:
-            # MOR deletes apply to the rewrite read (rewritten files get a
-            # new sequence number — see delete_where)
-            src_rw = self._read_with_deletes(spark, version, rewrite)
-            survivors = src_rw.join(gated, keys, "left_anti")
-            if capture_removed:
-                removed = src_rw.join(gated, keys, "left_semi")
-            if not defer_write:
-                new_entries = self._write_data(
-                    survivors, stats_cols, bloom_cols, partition_by
-                )
-        return kept_paths, new_entries, removed, survivors
 
     def delete_keys(
         self,
@@ -3661,50 +3241,25 @@ class SnapshotTable:
         that contain one). Same file-accounting contract as
         :meth:`delete_where` (untouched files carry over path-identical)
         but driven by a key SET instead of a predicate, so it composes
-        with any upstream decision operator. Key batches are
-        decision-output-sized by contract (a table-sized loser set means
-        the keep-list is the smaller side — write THAT as an overwrite
-        commit instead), and the broadcast is size-gated regardless
-        (:meth:`_rewrite_minus_keys`). Returns the version (unchanged
-        when no file contains a doomed key)."""
-        version = self.latest_version()
-        if version is None:
-            raise ValueError("snapshot table has no committed version")
-        keys = list(key_cols)
-        kept_paths, new_entries, removed, _surv = self._rewrite_minus_keys(
+        with any upstream decision operator: one delete-when-matched
+        clause over :meth:`_cow_dml` with the distinct key set as its
+        source. Key batches are decision-output-sized by contract (a
+        table-sized loser set means the keep-list is the smaller side —
+        write THAT as an overwrite commit instead), and the broadcast is
+        size-gated regardless. Returns the version (unchanged when no
+        file contains a doomed key)."""
+        keys = tuple(key_cols)
+        return self._cow_dml(
             spark,
-            version,
-            key_df.select(*keys),
-            keys,
-            stats_cols,
-            bloom_cols,
-            capture_removed=change_feed,
-            partition_by=partition_by,
-        )
-        # no-op iff NO data file was rewritten — checked by coverage, not
-        # entry counts: the head may carry CDF change files (neither data
-        # nor delete), and a count mismatch would publish a spurious
-        # data-changing 'delete' version for a zero-match key set, which
-        # needlessly kills subscribed streams (r13 review)
-        if all(e["path"] in kept_paths for e in self._data_entries(version)):
-            return version
-        extra = None
-        if change_feed and removed is not None:
-            # same CDF pattern as delete_where: removed rows' pre-images
-            # ride the commit as change files for the streaming feed
-            # (one tagged write job — _write_change_set)
-            new_entries = new_entries + self._write_change_set(
-                [(removed, "delete")],
-                self._schema(version) or removed.schema,
-            )
-            extra = {"cdf": True}
-        return self._publish_cow(
-            version,
-            kept_paths,
-            new_entries,
             "delete",
-            self._schema(version),
-            extra,
+            [("matched", None, "delete", None)],
+            source=key_df.select(*keys).distinct(),
+            keys=keys,
+            batch_name="delete_keys key set",
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+            change_feed=change_feed,
+            partition_by=partition_by,
         )
 
     def replace_where(
@@ -3963,32 +3518,10 @@ class SnapshotTable:
         version = self.latest_version()
         if version is None:
             raise ValueError("snapshot table has no committed version")
-        entries = self._data_entries(version)
-        cmap = self.column_mapping(version)
-        logical_prune_col = prune[0] if prune is not None else None
-        if cmap:
-            if prune is not None:
-                prune = (cmap.get(prune[0], prune[0]), prune[1], prune[2])
-            if partition_eq is not None:
-                partition_eq = {
-                    self._translate_spec(k, cmap): v
-                    for k, v in partition_eq.items()
-                }
-        if partition_eq is not None:
-            entries, _part_kept = self._partition_eq_split(
-                entries, partition_eq
-            )
-        if prune is not None:
-            col, lo, hi = prune
-            entries = [
-                e
-                for e in entries
-                if self._stats_box_overlaps(
-                    e.get("stats", {}).get(col), lo, hi
-                )
-            ]
+        entries, _kept, regions = self._dml_scope(version, prune, partition_eq)
         if not entries:
             return version
+        cmap = self.column_mapping(version)
         keys = list(key_cols)
         # ONE pruned scan feeds the emptiness probe, the key-file write,
         # and (under change_feed) the pre-image write (round-17 review:
@@ -4007,11 +3540,8 @@ class SnapshotTable:
             # own read box (the extra column is ignored by the read-side
             # anti-join)
             stat_cols = list(keys)
-            if (
-                logical_prune_col is not None
-                and logical_prune_col not in stat_cols
-            ):
-                stat_cols.append(logical_prune_col)
+            if prune is not None and prune[0] not in stat_cols:
+                stat_cols.append(prune[0])
             key_df = matched.select(*stat_cols).distinct()
             written = self._write_data(key_df, stats_cols=tuple(stat_cols))
             for e in written:
@@ -4036,18 +3566,6 @@ class SnapshotTable:
         kept_paths = {e["path"] for e in self._data_entries(version)} | {
             e["path"] for e in self._delete_entries(version)
         }
-        regions: list[dict] = []
-        if prune is not None:
-            regions.append({"where": prune})
-        if partition_eq is not None:
-            regions.append(
-                {
-                    "partition_in": {
-                        c: {hive_partition_value(v)}
-                        for c, v in partition_eq.items()
-                    }
-                }
-            )
         return self._publish_cow_serializable(
             version,
             kept_paths,
@@ -4055,7 +3573,7 @@ class SnapshotTable:
             "delete-mor",
             self._schema(version),
             extra,
-            read_regions=regions if regions else None,
+            read_regions=regions,
         )
 
     #: rows above which a merge-on-read delete-key file is applied as a
@@ -7316,7 +6834,7 @@ def snapshot_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     after_delete AS (
       SELECT * FROM base
       WHERE NOT (o_orderpriority = '5-LOW'
-                 AND o_custkey BETWEEN {DEL_LO} AND {DEL_HI})
+                 AND o_custkey BETWEEN {PRUNE_LO} AND {PRUNE_HI})
     ),
     merged AS (
       SELECT o_orderkey, o_custkey, o_orderpriority,
@@ -7340,11 +6858,13 @@ def snapshot_partition_dml_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 — Delta's partition-disjoint concurrency contract): a MERGE onto
     partition '1-URGENT' (re-price the {DEL_LO}..{DEL_HI} custkey box
     +100, insert one synthetic row per nation) loses its CAS race to a
-    concurrent ``delete_where`` scoped to partition '5-LOW'
-    (``partition_eq`` — the delete's rewrite AND read set are bounded
-    to that partition's files by manifest proof). The classifier sees
-    disjoint file sets and disjoint read regions and REBASES the merge
-    mechanically — no caller retry, both mutations' rows survive, CDC
+    concurrent ``delete_where`` of the {PRUNE_LO}..{PRUNE_HI} custkey
+    box scoped to partition '5-LOW' (``partition_eq`` — the delete's
+    rewrite AND read set are bounded to that partition's files by
+    manifest proof; the box holds rows at every scale factor, because a
+    delete that matches nothing publishes nothing and races nothing).
+    The classifier sees disjoint file sets and disjoint read regions
+    and REBASES the merge mechanically — no caller retry, both mutations' rows survive, CDC
     stays single-sourced. The race is injected deterministically (the
     interloper commits right before the merge's first publish attempt)
     and the query RAISES if the rebase did not actually happen, so the
@@ -7372,7 +6892,7 @@ def snapshot_partition_dml_race(spark: SparkSession, sf_dir: str) -> DataFrame:
             state["delete_version"] = other.delete_where(
                 spark,
                 f"o_orderpriority = '5-LOW' AND o_custkey "
-                f"BETWEEN {DEL_LO} AND {DEL_HI}",
+                f"BETWEEN {PRUNE_LO} AND {PRUNE_HI}",
                 partition_eq={"o_orderpriority": "5-LOW"},
                 partition_by=("o_orderpriority",),
             )
@@ -7739,7 +7259,7 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     every mod-{INSERT_MOD} row under a fresh key (+{INSERT_OFFSET}) with
     priority 'NEW'. ``merge_upsert`` locates the files holding matched
     keys (one broadcast left-semi join, file-granular), rewrites only
-    those with the matched rows anti-joined out, appends the batch, and
+    those with the matched rows replaced and the new keys inserted, and
     publishes atomically. The per-priority aggregate over the merged
     table is fully integer (counts + decimal cents): a lost update leaves
     mass in the original priority bucket, a double-apply doubles

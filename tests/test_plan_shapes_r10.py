@@ -13,8 +13,9 @@ from serverless_mapreduce_spark.sources.snapshots import SnapshotTable
 
 
 def test_merge_key_probe_is_broadcast_semi_on_the_key_side(spark, tmp_path):
-    """_rewrite_minus_keys' file-location join must build on the (small)
-    key set: BroadcastHashJoin ... LeftSemi, BuildRight — semi supports
+    """The copy-on-write DML kernel's file-location join
+    (``SnapshotTable._cow_dml``) must build on the (small) key set:
+    BroadcastHashJoin ... LeftSemi, BuildRight — semi supports
     BuildRight, so the hint on the RIGHT side is honorable. If this plan
     ever degrades to a shuffle or a right-side-table broadcast, merge
     cost stops being O(batch)."""
