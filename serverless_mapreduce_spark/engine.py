@@ -22,7 +22,7 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from serverless_mapreduce_spark import registry
-from serverless_mapreduce_spark.monitoring import observe_counts
+from serverless_mapreduce_spark.monitoring import codegen_counters, observe_counts
 
 
 @dataclass
@@ -47,6 +47,13 @@ class QueryRun:
     shuffle_write_bytes: int = 0
     input_bytes: int = 0
     output_bytes: int = 0
+    # Java classes code generation compiled during the run, and the
+    # milliseconds spent compiling them: deltas of Spark's process-wide
+    # codegen counters over the run's window, so a run concurrent with
+    # another on the same JVM also counts the other's compiles. A warm
+    # run whose plans are still in the codegen cache compiles 0.
+    codegen_compiles: int = 0
+    codegen_compile_ms: float = 0.0
     error: str | None = None
 
 
@@ -83,6 +90,7 @@ class Engine:
         sc = self.spark.sparkContext
         group = f"smr-run-{name}-{len(self._runs[name])}"
         sc.setJobGroup(group, f"engine.run({name})", interruptOnCancel=False)
+        compiles0, compile_ms0 = codegen_counters(self.spark)
         t0 = time.perf_counter()
         try:
             df = fn(self.spark, self.sf_dir)
@@ -96,6 +104,9 @@ class Engine:
             raise
         finally:
             rec.wall_s = round(time.perf_counter() - t0, 3)
+            compiles, compile_ms = codegen_counters(self.spark)
+            rec.codegen_compiles = compiles - compiles0
+            rec.codegen_compile_ms = round(compile_ms - compile_ms0, 3)
             tracker = sc.statusTracker()
             job_ids = tracker.getJobIdsForGroup(group)
             rec.num_jobs = len(job_ids)

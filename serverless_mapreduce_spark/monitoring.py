@@ -13,7 +13,7 @@ reference's lineCount-style counters, minus the separate metrics store.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -39,3 +39,15 @@ def observe_counts(
             F.sum(F.when(F.col(key_col).isNull(), 1).otherwise(0)).alias("nullKeys")
         )
     return df.observe(obs, *metrics), obs
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, total compile ms) so far in this JVM: Spark's
+    process-wide codegen counters (``CodegenMetrics`` compilation count,
+    ``CodeGenerator.compileTime``). A class served from the codegen
+    cache does not count. Two reads bracket a window; every thread on
+    the JVM (concurrent queries, local-mode executors) adds to both."""
+    jvm = spark.sparkContext._jvm  # type: ignore[attr-defined]
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), nanos / 1e6

@@ -5138,17 +5138,36 @@ class SnapshotTable:
         groups = self.plan_changes(from_version, to_version)
         parts = []
         for files, ctype, v, ts in groups:
+            # logical names pinned to to_version: a CDF window spanning a
+            # rename serves the POST-rename schema
+            df = self._open_files(spark, to_version, [p for p, _ in files])
+            # The commit's version and time are looked up by file name in
+            # a map literal rather than written as F.lit(v) / F.lit(ts):
+            # Spark inlines a primitive literal into the generated Java,
+            # so every table's fresh commit times compiled new classes
+            # (10 per call on a table of the benchmark's lifecycle shape);
+            # a map literal is passed by reference and the generated code
+            # stays the same. Every file of a group carries the same
+            # commit, so names repeated across partition directories map
+            # to the same value.
+            commit = F.struct(
+                F.lit(v).cast("bigint").alias("v"),
+                F.lit(ts).cast("double").alias("ts"),
+            )
+            names = dict.fromkeys(os.path.basename(p) for p, _ in files)
+            by_name = F.create_map(
+                *[x for n in names for x in (F.lit(n), commit)]
+            )
+            c = F.element_at(
+                by_name, df.metadataColumn("_metadata").getField("file_name")
+            )
             parts.append(
-                # logical names pinned to to_version: a CDF window
-                # spanning a rename serves the POST-rename schema
-                self._open_files(spark, to_version, [p for p, _ in files])
-                .withColumn("_change_type", F.lit(ctype))
-                .withColumn(
-                    "_commit_version", F.lit(v).cast("bigint")
-                )
-                .withColumn(
-                    "_commit_timestamp",
-                    F.lit(ts).cast("double"),
+                df.withColumns(
+                    {
+                        "_change_type": F.lit(ctype),
+                        "_commit_version": c.getField("v"),
+                        "_commit_timestamp": c.getField("ts"),
+                    }
                 )
             )
         if not parts:

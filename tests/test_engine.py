@@ -33,6 +33,33 @@ def test_engine_run_records_metrics(spark, sf_dir):
         assert rec["num_tasks"] >= 1
         assert rec["error"] is None
     assert set(eng.status()) == {"q1_filter_scan", "dedup_exact"}
+    # the repeat run's generated classes are still in the codegen cache
+    assert st[1]["codegen_compiles"] == 0
+    assert st[1]["codegen_compile_ms"] == 0
+
+
+def test_engine_run_records_codegen_compiles(spark, sf_dir):
+    """A plan with a literal no earlier plan had compiles fresh classes
+    (Spark inlines a long literal into the generated Java) and the run
+    record counts them with their compile time; the same plan again is
+    served from the codegen cache and compiles none."""
+    import uuid
+
+    import serverless_mapreduce_spark.registry as registry
+
+    k = uuid.uuid4().int % (1 << 40) + 2
+    registry._QUERIES["_fresh_literal"] = lambda s, d: s.range(64).selectExpr(f"id * {k} AS x")
+    registry._PRIORITY["_fresh_literal"] = 999
+    eng = Engine(spark, sf_dir)
+    try:
+        cold = eng.run_info("_fresh_literal")
+        warm = eng.run_info("_fresh_literal")
+    finally:
+        registry._QUERIES.pop("_fresh_literal", None)
+        registry._PRIORITY.pop("_fresh_literal", None)
+    assert cold["codegen_compiles"] >= 1
+    assert cold["codegen_compile_ms"] > 0
+    assert (warm["codegen_compiles"], warm["codegen_compile_ms"]) == (0, 0)
 
 
 def test_engine_records_failures(spark, sf_dir):
