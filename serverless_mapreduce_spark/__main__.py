@@ -93,6 +93,7 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
         spark = get_spark(app_name=f"smr-cli-{args.cmd}")
 
     from serverless_mapreduce_spark.engine import Engine
+    from serverless_mapreduce_spark.session import jvm_archive_state
 
     eng = Engine(spark=spark, sf_dir=args.sf_dir)
 
@@ -116,6 +117,8 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
     if args.cmd == "run":
         df = eng.run(args.name)
         print(df.limit(args.show).toPandas().to_string(index=False), file=out)
+        # how the driver JVM started: from the class-data archive or not
+        print(f"jvm archive: {jvm_archive_state()}", file=out)
         print(json.dumps(eng.report(args.name), indent=2), file=out)
         return 0
 

@@ -22,7 +22,8 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from serverless_mapreduce_spark import registry
-from serverless_mapreduce_spark.monitoring import codegen_counters, observe_counts
+from serverless_mapreduce_spark.monitoring import codegen_counters, jvm_counters, observe_counts
+from serverless_mapreduce_spark.session import jvm_archive_state
 
 
 @dataclass
@@ -54,6 +55,14 @@ class QueryRun:
     # run whose plans are still in the codegen cache compiles 0.
     codegen_compiles: int = 0
     codegen_compile_ms: float = 0.0
+    # JVM classes loaded and JIT compile milliseconds over the run (the
+    # driver JVM's MXBean totals, process-wide like the codegen counters);
+    # a cold run loads thousands of classes, a warm one a few dozen. And how
+    # the driver JVM uses the class-data archive: "mapped" (its classes
+    # load from the archive), "recording" or "off".
+    jvm_classes_loaded: int = 0
+    jvm_jit_ms: int = 0
+    jvm_archive: str = "off"
     error: str | None = None
 
 
@@ -90,7 +99,9 @@ class Engine:
         sc = self.spark.sparkContext
         group = f"smr-run-{name}-{len(self._runs[name])}"
         sc.setJobGroup(group, f"engine.run({name})", interruptOnCancel=False)
+        rec.jvm_archive = jvm_archive_state()
         compiles0, compile_ms0 = codegen_counters(self.spark)
+        classes0, jit_ms0 = jvm_counters(self.spark)
         t0 = time.perf_counter()
         try:
             df = fn(self.spark, self.sf_dir)
@@ -107,6 +118,9 @@ class Engine:
             compiles, compile_ms = codegen_counters(self.spark)
             rec.codegen_compiles = compiles - compiles0
             rec.codegen_compile_ms = round(compile_ms - compile_ms0, 3)
+            classes, jit_ms = jvm_counters(self.spark)
+            rec.jvm_classes_loaded = classes - classes0
+            rec.jvm_jit_ms = jit_ms - jit_ms0
             tracker = sc.statusTracker()
             job_ids = tracker.getJobIdsForGroup(group)
             rec.num_jobs = len(job_ids)

@@ -51,3 +51,13 @@ def codegen_counters(spark: SparkSession) -> tuple[int, float]:
     count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
     nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     return int(count), nanos / 1e6
+
+
+def jvm_counters(spark: SparkSession) -> tuple[int, int]:
+    """(classes loaded, JIT compile ms) so far in the driver JVM: the
+    ``ClassLoadingMXBean`` total and the ``CompilationMXBean`` time. A
+    class mapped from the class-data archive still counts as loaded; it
+    only skips the parse and verification. Two reads bracket a window."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory  # type: ignore[attr-defined]
+    classes = mf.getClassLoadingMXBean().getTotalLoadedClassCount()
+    return int(classes), int(mf.getCompilationMXBean().getTotalCompilationTime())

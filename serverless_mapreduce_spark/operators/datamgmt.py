@@ -27,7 +27,7 @@ Scale stance (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from serverless_mapreduce_spark.catalog import table
@@ -272,6 +272,9 @@ _PROFILE_COLS = (
 #: makes the rendering engine-independent at any fixture value range.
 _PROFILE_DECIMAL_COLS = frozenset({"o_totalprice"})
 
+#: The typed value slots of a profile cell (see profile_orders).
+_PROFILE_SLOTS = {"n": "bigint", "d": "double", "s": "string"}
+
 
 def _profile_minmax_sql(c: str) -> str:
     if c in _PROFILE_DECIMAL_COLS:
@@ -303,50 +306,65 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max — the first query every data platform runs against a new
     table (drives skew decisions, join-key selection, and data-quality
     alerts downstream). All five columns profile in ONE pass over the
-    scan: count/min/max are plain map-side-partial aggregates and the
-    exact distincts expand via Spark's single expand+aggregate rewrite —
-    no per-column scans (the oracle's UNION of five scans is the naive
-    form). At 100 TB swap COUNT(DISTINCT) for approx_count_distinct
-    (HLL partials merge map-side; same plan minus the expand) — exact is
-    registered because the oracle can verify it. Min/max are CAST to
-    strings so one output schema covers heterogeneous column types;
+    scan: each row unpivots into one cell per column, the cells aggregate
+    per (column, value) with map-side partials, and a second aggregate per
+    column counts the non-null values (the exact distinct count), sums the
+    null rows and takes min/max. The oracle's UNION of five scans is the
+    naive form. At 100 TB swap the distinct count for
+    approx_count_distinct over the cells (HLL partials merge map-side, no
+    per-value shuffle) — exact is registered because the oracle can
+    verify it. A cell carries its value in the slot of its type (bigint,
+    double or string), so values compare as their own type and one output
+    schema covers heterogeneous columns; min/max render as strings, and
     double columns go through DECIMAL(18,2) first because the engines'
     double→string renderings differ (see _PROFILE_DECIMAL_COLS).
-    ensure_parallelism spreads the 5x expand off the single-row-group
-    fixture scan (a no-op on real multi-row-group data); the ~3 s warm
-    cost at sf0.1 is the expand itself — 5 distinct aggregates rewrite to
-    a 6-way expand with two shuffle phases, the price of EXACT profiling
-    that the approx variant avoids."""
+
+    Five ``countDistinct`` aggregates in one ``agg`` would do the same in
+    one plan, but Spark's multi-distinct rewrite orders its expand
+    projections by a hash of the columns' expression ids, which are new on
+    every run: each run got a different expand and recompiled ~10 Java
+    classes. The explicit two-level aggregate plans the same on every run.
+    ensure_parallelism spreads the 5x unpivot off the single-row-group
+    fixture scan (a no-op on real multi-row-group data)."""
     from serverless_mapreduce_spark.catalog import ensure_parallelism
 
     o = ensure_parallelism(spark, table(spark, sf_dir, "orders"))
-    aggs = []
-    for c in _PROFILE_COLS:
-        mn, mx = F.min(c), F.max(c)
-        if c in _PROFILE_DECIMAL_COLS:
-            mn, mx = mn.cast("decimal(18,2)"), mx.cast("decimal(18,2)")
-        aggs += [
-            (F.count("*") - F.count(c)).alias(f"{c}__nulls"),
-            F.countDistinct(c).alias(f"{c}__distinct"),
-            mn.cast("string").alias(f"{c}__min"),
-            mx.cast("string").alias(f"{c}__max"),
-        ]
-    wide = o.agg(*aggs)
-    return wide.select(
+    dtypes = dict(o.dtypes)
+    slot = {
+        c: "d" if c in _PROFILE_DECIMAL_COLS else "s" if dtypes[c] == "string" else "n"
+        for c in _PROFILE_COLS
+    }
+    cells = o.select(
         F.inline(
             F.array(
                 *[
                     F.struct(
                         F.lit(c).alias("col"),
-                        F.col(f"{c}__nulls").alias("n_nulls"),
-                        F.col(f"{c}__distinct").alias("n_distinct"),
-                        F.col(f"{c}__min").alias("min_str"),
-                        F.col(f"{c}__max").alias("max_str"),
+                        *[
+                            (F.col(c) if slot[c] == k else F.lit(None)).cast(t).alias(k)
+                            for k, t in _PROFILE_SLOTS.items()
+                        ],
                     )
                     for c in _PROFILE_COLS
                 ]
             )
         )
+    )
+    values = cells.groupBy("col", *_PROFILE_SLOTS).agg(F.count("*").alias("rows"))
+    present = F.col("n").isNotNull() | F.col("d").isNotNull() | F.col("s").isNotNull()
+
+    def rendered(agg) -> Column:
+        return F.coalesce(
+            agg("n").cast("string"),
+            agg("d").cast("decimal(18,2)").cast("string"),
+            agg("s"),
+        )
+
+    return values.groupBy("col").agg(
+        F.sum(F.when(present, 0).otherwise(F.col("rows"))).alias("n_nulls"),
+        F.count(F.when(present, 1)).alias("n_distinct"),
+        rendered(F.min).alias("min_str"),
+        rendered(F.max).alias("max_str"),
     )
 
 

@@ -29,6 +29,7 @@ def test_cli_run_prints_rows_and_report(spark, sf_dir):
     report = json.loads(text[text.index('{\n'):])
     rec = report["q1_filter_scan"]
     assert rec["runs"] == 1 and rec["succeeded"] == 1
+    assert "\njvm archive: " in text[: text.index('{\n')]
     assert rec["task_time_ms"] >= 0 and rec["input_bytes"] > 0
 
 

@@ -66,6 +66,17 @@ def test_warm_query_mix_pass_compiles_nothing(spark, sf_dir):
     assert second <= max(0.05 * first, 7), (first, second)
 
 
+def test_profile_orders_third_run_compiles_nothing(spark, sf_dir):
+    """The profile's distinct counts plan the same on every run. Five
+    ``countDistinct`` aggregates in one ``agg`` did not: Spark's
+    multi-distinct rewrite orders its expand by a hash of the columns'
+    expression ids, new on every run, so each run recompiled ~10 classes
+    (34, 11, 10 in one session)."""
+    engine = Engine(spark, sf_dir)
+    compiles = [engine.run_info("profile_orders")["codegen_compiles"] for _ in range(3)]
+    assert compiles[2] == 0, compiles
+
+
 def _lifecycle_table(spark, sf_dir, root) -> tuple[SnapshotTable, int, int]:
     """The benchmark's table_lifecycle shape: four orderkey-range appends
     with stats, then an upsert, a predicate delete and a predicate update,

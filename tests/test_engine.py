@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from serverless_mapreduce_spark.engine import Engine
+from serverless_mapreduce_spark.session import jvm_archive_state
 
 
 def test_engine_lists_registered_queries(spark, sf_dir):
@@ -33,9 +34,16 @@ def test_engine_run_records_metrics(spark, sf_dir):
         assert rec["num_tasks"] >= 1
         assert rec["error"] is None
     assert set(eng.status()) == {"q1_filter_scan", "dedup_exact"}
-    # the repeat run's generated classes are still in the codegen cache
+    # the repeat run's generated classes are still in the codegen cache,
+    # and the JVM classes its plan needs are loaded: a warm run loads a
+    # few dozen at most (a cold one thousands)
     assert st[1]["codegen_compiles"] == 0
     assert st[1]["codegen_compile_ms"] == 0
+    assert 0 <= st[1]["jvm_classes_loaded"] < 100
+    assert st[1]["jvm_jit_ms"] >= 0
+    # the session's class-data archive state rides every run record
+    assert {r["jvm_archive"] for r in st} == {jvm_archive_state()}
+    assert jvm_archive_state() in ("mapped", "recording", "off")
 
 
 def test_engine_run_records_codegen_compiles(spark, sf_dir):
