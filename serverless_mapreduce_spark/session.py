@@ -150,6 +150,19 @@ def get_spark(
         # 2.31 s over five delete_where calls. Errors still raise with
         # their Spark message, without the Python call-site fragment.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Every task of a pooled Python worker starts with
+        # importlib.invalidate_caches(), which on Python < 3.13 makes each
+        # zipimporter re-read its archive's directory: 12 over pyspark.zip
+        # (1,328 entries, 6.6 ms a read alone), 2 over Spark's core jar
+        # (5,359 entries, 26 ms) and 2 over py4j, 160-370 ms per task
+        # with four workers at once (local[4], shared 4-vCPU host). The
+        # daemon in worker_daemon.py keeps a directory while its archive
+        # is unchanged (0.1-0.3 ms): an identity mapInPandas job over 8
+        # partitions went from 1.56-1.70 s to 0.41-0.43 s of wall. Spark
+        # starts the daemon with ``python -m`` from the driver's cwd, so
+        # the package's parent goes on the workers' PYTHONPATH.
+        .config("spark.python.daemon.module", "serverless_mapreduce_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", paths.REPO_ROOT)
         # see the os.environ block above — carries the same one-BLAS-
         # thread-per-worker sizing to non-local executors
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
