@@ -57,11 +57,14 @@ class QueryRun:
     codegen_compile_ms: float = 0.0
     # JVM classes loaded and JIT compile milliseconds over the run (the
     # driver JVM's MXBean totals, process-wide like the codegen counters);
-    # a cold run loads thousands of classes, a warm one a few dozen. And how
-    # the driver JVM uses the class-data archive: "mapped" (its classes
-    # load from the archive), "recording" or "off".
+    # a cold run loads thousands of classes, a warm one a few dozen. The
+    # JIT code cache's used MB when the run ended (a level, not a delta:
+    # a filling cache shows across runs, and a full one stops the JIT).
+    # And how the driver JVM uses the class-data archive: "mapped" (its
+    # classes load from the archive), "recording" or "off".
     jvm_classes_loaded: int = 0
     jvm_jit_ms: int = 0
+    jvm_code_cache_mb: float = 0.0
     jvm_archive: str = "off"
     error: str | None = None
 
@@ -101,7 +104,7 @@ class Engine:
         sc.setJobGroup(group, f"engine.run({name})", interruptOnCancel=False)
         rec.jvm_archive = jvm_archive_state()
         compiles0, compile_ms0 = codegen_counters(self.spark)
-        classes0, jit_ms0 = jvm_counters(self.spark)
+        classes0, jit_ms0, _ = jvm_counters(self.spark)
         t0 = time.perf_counter()
         try:
             df = fn(self.spark, self.sf_dir)
@@ -118,9 +121,10 @@ class Engine:
             compiles, compile_ms = codegen_counters(self.spark)
             rec.codegen_compiles = compiles - compiles0
             rec.codegen_compile_ms = round(compile_ms - compile_ms0, 3)
-            classes, jit_ms = jvm_counters(self.spark)
+            classes, jit_ms, code_cache_mb = jvm_counters(self.spark)
             rec.jvm_classes_loaded = classes - classes0
             rec.jvm_jit_ms = jit_ms - jit_ms0
+            rec.jvm_code_cache_mb = round(code_cache_mb, 1)
             tracker = sc.statusTracker()
             job_ids = tracker.getJobIdsForGroup(group)
             rec.num_jobs = len(job_ids)

@@ -53,11 +53,19 @@ def codegen_counters(spark: SparkSession) -> tuple[int, float]:
     return int(count), nanos / 1e6
 
 
-def jvm_counters(spark: SparkSession) -> tuple[int, int]:
-    """(classes loaded, JIT compile ms) so far in the driver JVM: the
-    ``ClassLoadingMXBean`` total and the ``CompilationMXBean`` time. A
-    class mapped from the class-data archive still counts as loaded; it
-    only skips the parse and verification. Two reads bracket a window."""
+def jvm_counters(spark: SparkSession) -> tuple[int, int, float]:
+    """(classes loaded, JIT compile ms, JIT code cache used MB) so far in
+    the driver JVM: the ``ClassLoadingMXBean`` total, the
+    ``CompilationMXBean`` time and the summed usage of the ``CodeHeap``
+    memory pools. A class mapped from the class-data archive still counts
+    as loaded; it only skips the parse and verification. Two reads bracket
+    a window for the first two; the code cache is a level, and a full one
+    stops the JIT compiling."""
     mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory  # type: ignore[attr-defined]
     classes = mf.getClassLoadingMXBean().getTotalLoadedClassCount()
-    return int(classes), int(mf.getCompilationMXBean().getTotalCompilationTime())
+    code_cache = sum(
+        pool.getUsage().getUsed()
+        for pool in mf.getMemoryPoolMXBeans()
+        if pool.getName().startswith("CodeHeap")
+    )
+    return int(classes), int(mf.getCompilationMXBean().getTotalCompilationTime()), code_cache / 2**20

@@ -43,6 +43,10 @@ log = logging.getLogger(__name__)
 #: heap.
 CODEGEN_CACHE_ENTRIES = 8192
 
+#: The start-up hook directory of the Python processes Spark launches
+#: (``worker_site/sitecustomize.py``; see the PYTHONPATH setting below).
+WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker_site")
+
 #: The driver JVM starts from a dynamic AppCDS archive (JDK class-data
 #: sharing): a file of the classes a previous session loaded, already
 #: parsed and verified, which the JVM maps at start instead of loading
@@ -90,8 +94,9 @@ def get_spark(
     # thread pools): importing numpy spins up an OpenBLAS pool sized to
     # the MACHINE (~3 s of sys time per process on 32 cores, measured —
     # plans/r18/prof_worker_spawn.txt). Every Python process Spark spawns
-    # (executor workers, streaming source/sink runners, schema-inference
-    # workers) pays that at import; a cold 32-worker batch turns it into
+    # (the worker daemon and the workers it forks, the Python DataSource
+    # planner daemons, the streaming source runner of each start()) pays
+    # that at import; a cold 32-worker batch turns it into
     # a multi-second kernel storm. Parallelism comes from Spark tasks,
     # not intra-worker BLAS — one thread per worker is the correct
     # production sizing (os.environ: local-mode workers inherit it;
@@ -144,25 +149,39 @@ def get_spark(
         # GC pause per run.
         .config("spark.driver.extraJavaOptions", f"-Xms{mem} -XX:NewRatio=2{archive}")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # The cache keys on the generated source, and by default the class
+        # name carries the pipeline's codegen stage id. AQE numbers stages
+        # in the order they materialize, which varies with task timing
+        # when a plan has independent branches, so the same pipeline came
+        # back under another id and compiled again: dedup_persistent_index
+        # compiled 76, 4, 6, 0, ... classes on runs 1-4 of one session,
+        # eval_ann_nprobe_sweep 78, 8, 8, 0. Without the id in the name,
+        # runs 2-6 compile 0, and identical pipelines of different queries
+        # share one class (the id stays in the generated code's comment).
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # PySpark otherwise captures the Python call site of every
         # DataFrame/Column call for error messages: a stack walk, a failed
         # ``import IPython`` and ~5 py4j round trips per call, 0.060 s of
         # 2.31 s over five delete_where calls. Errors still raise with
         # their Spark message, without the Python call-site fragment.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # Every task of a pooled Python worker starts with
-        # importlib.invalidate_caches(), which on Python < 3.13 makes each
-        # zipimporter re-read its archive's directory: 12 over pyspark.zip
-        # (1,328 entries, 6.6 ms a read alone), 2 over Spark's core jar
-        # (5,359 entries, 26 ms) and 2 over py4j, 160-370 ms per task
-        # with four workers at once (local[4], shared 4-vCPU host). The
-        # daemon in worker_daemon.py keeps a directory while its archive
-        # is unchanged (0.1-0.3 ms): an identity mapInPandas job over 8
-        # partitions went from 1.56-1.70 s to 0.41-0.43 s of wall. Spark
-        # starts the daemon with ``python -m`` from the driver's cwd, so
-        # the package's parent goes on the workers' PYTHONPATH.
-        .config("spark.python.daemon.module", "serverless_mapreduce_spark.worker_daemon")
-        .config("spark.executorEnv.PYTHONPATH", paths.REPO_ROOT)
+        # Spark prepends pyspark.zip, its py4j zip and its core jar to the
+        # path of every Python process it starts, and a zip carries no
+        # bytecode: the streaming source runner that each start() spawns
+        # (outside the worker daemon) compiled pyspark from source, 1.44-
+        # 1.65 s of imports against 0.37-0.48 s from the installed pyspark
+        # of the same release. The sitecustomize in WORKER_SITE drops each
+        # archive the installed environment provides, and keeps the zip
+        # directory of any archive left while it is unchanged (each task
+        # of a pooled worker calls importlib.invalidate_caches(), which on
+        # Python < 3.13 re-reads every zip's directory: 160-370 ms per
+        # task at local[4] with pyspark imported from the zip). The
+        # perfbench table_lifecycle drain went from 2.25 to 0.83 s, and the
+        # nine snapshot-stream registry lines from 44.3 to 30.7 s of warm
+        # wall at sf0.01 (local[4], shared 4-vCPU host). The repo root
+        # comes first: Spark starts workers from the driver's cwd, and the
+        # facade's callbacks import the package.
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join((paths.REPO_ROOT, WORKER_SITE)))
         # see the os.environ block above — carries the same one-BLAS-
         # thread-per-worker sizing to non-local executors
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")

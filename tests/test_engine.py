@@ -41,6 +41,9 @@ def test_engine_run_records_metrics(spark, sf_dir):
     assert st[1]["codegen_compile_ms"] == 0
     assert 0 <= st[1]["jvm_classes_loaded"] < 100
     assert st[1]["jvm_jit_ms"] >= 0
+    # the JIT code cache's level rides every record: JIT-compiled code
+    # from the session so far, under the JVM's reserved cache size
+    assert all(0 < r["jvm_code_cache_mb"] < 2048 for r in st)
     # the session's class-data archive state rides every run record
     assert {r["jvm_archive"] for r in st} == {jvm_archive_state()}
     assert jvm_archive_state() in ("mapped", "recording", "off")
